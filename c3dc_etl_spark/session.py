@@ -10,6 +10,16 @@ settings are cluster-safe. Every knob here is a scale decision:
   etl/target/c3dc_etl.py:1330-1344). Query code still uses try_* variants
   so it stays correct under a foreign ANSI-on session.
 - Arrow on: every Python<->JVM handoff (pandas UDFs, toPandas) is batched.
+- Generated-code cache of 4096 classes
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). A
+  study run compiles more classes than 100, so at the default each run
+  evicted what the next one needed and recompiled it. Compiles per
+  operation of the perfbench workloads, read from ``CodegenMetrics``
+  before and after each operation (4 cores, seed 7, first operation
+  then warm ones): study_document 196, then 161-162 each at 100
+  entries vs 176, then 0-18 at 4096; merge_publish 659, then 644-648
+  vs 416, then 0-28; operator_suite 93, then 51 vs 93, then 0.
+  ``extra_conf`` overrides it like any other setting.
 
 Note on ``spark.sql.legacy.parquet.nanosAsLong``: the suite's events
 loader (suite/registry.py ``read_events_parquet``) sets it ONLY when a
@@ -23,33 +33,68 @@ that does would want the conf anyway.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _default_driver_mem() -> str:
-    """Local-mode driver heap default: ~45% of physical RAM, capped at
-    48g, floored at 4g (ADVICE r12 #3: a hard 48g default sized to the
-    128 GiB bench box would fail JVM startup or swap on smaller hosts).
-    On the 128 GiB box this still derives 48g — the bench-comparable
-    value round 12 measured (zero Full GCs, ~28.7 GB peak used).
-    Override with SPARK_DRIVER_MEM."""
-    total_kb = 0
+# cgroup memory limit files: v2, then v1. v2 writes "max" for no limit;
+# v1 writes a page-rounded 2**63 - 1.
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_NO_LIMIT_BYTES = 1 << 60
+
+
+def memory_limit_bytes(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = CGROUP_MEMORY_LIMITS
+) -> int:
+    """Memory this process may use: the minimum of the host's MemTotal
+    and every readable cgroup limit, in bytes; 0 when none is known. A
+    cgroup limit of ``max`` or of 2**60 bytes and above means no limit."""
+    limits = []
     try:
-        with open("/proc/meminfo") as fh:
+        with open(meminfo) as fh:
             for ln in fh:
                 if ln.startswith("MemTotal:"):
-                    total_kb = int(ln.split()[1])
+                    limits.append(int(ln.split()[1]) * 1024)
                     break
     except OSError:  # pragma: no cover — non-Linux host
         pass
-    if total_kb <= 0:
+    for path in cgroup_limits:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit() and int(raw) < _NO_LIMIT_BYTES:
+            limits.append(int(raw))
+    return min((v for v in limits if v > 0), default=0)
+
+
+def _default_driver_mem() -> str:
+    """Local-mode driver heap default: ~45% of the memory this process
+    may use (``memory_limit_bytes``: host RAM or the container's cgroup
+    limit, whichever is smaller), capped at 48g, floored at 4g (ADVICE
+    r12 #3: a hard 48g default sized to the 128 GiB bench box would fail
+    JVM startup or swap on smaller hosts). On the 128 GiB box this still
+    derives 48g — the bench-comparable value round 12 measured (zero
+    Full GCs, ~28.7 GB peak used). Override with SPARK_DRIVER_MEM."""
+    total = memory_limit_bytes()
+    if total <= 0:
         return "4g"
-    return f"{max(4, min(48, (total_kb * 45) // (100 * 1024 * 1024)))}g"
+    return f"{max(4, min(48, (total * 45) // (100 * 1024**3)))}g"
 
 
 def get_spark(app_name: str = "c3dc-etl-spark", **extra_conf: str) -> SparkSession:
@@ -91,7 +136,7 @@ def get_spark(app_name: str = "c3dc-etl-spark", **extra_conf: str) -> SparkSessi
         # with 216 young pauses totalling 5.2s, max 397ms, zero Full
         # GCs, and no persistent degradation. 48g keeps ~60% of the
         # 128 GiB box free; on smaller hosts the default derives from
-        # physical RAM instead (_default_driver_mem — ADVICE r12 #3);
+        # host RAM or the cgroup limit instead (_default_driver_mem);
         # override via SPARK_DRIVER_MEM.
         .config(
             "spark.driver.memory",
@@ -99,7 +144,25 @@ def get_spark(app_name: str = "c3dc-etl-spark", **extra_conf: str) -> SparkSessi
         )
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # one study run compiles ~160 generated classes (~650 with a
+        # merge); the default 100-entry cache evicted them between
+        # runs — see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
+    """``[fn(x) for x in items]``, one thread per item, so independent
+    small Spark actions share the executors instead of queueing. Each
+    thread inherits the caller's job group and local properties. Results
+    keep input order; the first failure in input order is re-raised once
+    every thread has finished."""
+    items = list(items)
+    if not items:
+        return []
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), x) for x in items]
+    return [f.result() for f in futures]

@@ -17,6 +17,7 @@ import json
 from pyspark.sql import DataFrame
 
 from c3dc_etl_spark.schema.registry import SchemaRegistry
+from c3dc_etl_spark.session import run_concurrently
 
 
 def _clean(value: object) -> object:
@@ -33,19 +34,29 @@ def assemble_document(
 ) -> dict[str, list[dict]]:
     """Collect per-node DataFrames into the reference's document shape:
     ``{plural_node_name: [record dicts]}`` with null properties omitted.
-    Records are ordered by the node id field for byte-stable output."""
+    Records are ordered by the node id field for byte-stable output.
+
+    Each node is one small sorted collect, independent of the others;
+    the collects run concurrently (``session.run_concurrently``), and
+    each thread converts its own Rows to dicts, so no node's Row list
+    outlives its conversion. Keys keep ``node_frames`` order."""
     registry = registry or SchemaRegistry()
-    doc: dict[str, list[dict]] = {}
-    for node, df in node_frames.items():
+    if not node_frames:
+        return {}
+
+    def records(node: str) -> list[dict]:
+        df = node_frames[node]
         id_field = registry.node(node).id_field
         if id_field in df.columns:
             df = df.orderBy(id_field)
-        records = []
-        for row in df.collect():
-            d = row.asDict(recursive=True)
-            records.append({k: _clean(v) for k, v in d.items() if v is not None})
-        doc[registry.node(node).plural] = records
-    return doc
+        return [
+            {k: _clean(v) for k, v in row.asDict(recursive=True).items() if v is not None}
+            for row in df.collect()
+        ]
+
+    spark = next(iter(node_frames.values())).sparkSession
+    per_node = run_concurrently(spark, records, node_frames)
+    return {registry.node(n).plural: recs for n, recs in zip(node_frames, per_node)}
 
 
 def save_harmonized_json(doc: dict, path: str, *, indent: int = 2) -> None:

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from c3dc_etl_spark.session import run_concurrently
+
 
 def duplicate_report(
     records: DataFrame,
@@ -43,9 +45,15 @@ def duplicate_report(
 
 
 def node_count_report(node_frames: dict[str, DataFrame]) -> list[tuple[str, int]]:
-    """K4: (node, record_count) rows for the report CSV; driver-side by
-    nature (one scalar per node)."""
-    return [(node, df.count()) for node, df in sorted(node_frames.items())]
+    """K4: (node, record_count) rows for the report CSV, sorted by node;
+    driver-side by nature (one scalar per node). The per-node counts
+    run concurrently (``session.run_concurrently``)."""
+    nodes = sorted(node_frames)
+    if not nodes:
+        return []
+    spark = node_frames[nodes[0]].sparkSession
+    counts = run_concurrently(spark, lambda node: node_frames[node].count(), nodes)
+    return list(zip(nodes, counts))
 
 
 def save_report_csv(rows: list[tuple], header: Sequence[str], path: str) -> None:

@@ -113,6 +113,38 @@ def test_referential_violations_detects_orphan(spark):
     assert [(v["record_id"], v["unresolved_id"]) for v in viol] == [("d2", "ghost")]
 
 
+def test_assemble_document_matches_sequential_reference(built_doc):
+    """The concurrent collect gives the bytes a plain per-node loop
+    gives: same key order, records sorted by id, nulls omitted."""
+    frames, doc = built_doc
+    reference = {}
+    for node, df in frames.items():
+        id_field = REG.node(node).id_field
+        rows = sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: d[id_field])
+        reference[REG.node(node).plural] = [
+            {k: v for k, v in d.items() if v is not None} for d in rows
+        ]
+    assert list(doc) == ["participants", "diagnoses"]
+    assert json.dumps(doc) == json.dumps(reference)
+    assert json.dumps(assemble_document(frames, REG)) == json.dumps(reference)
+
+
+def test_assemble_document_runs_in_callers_job_group(spark, built_doc):
+    frames, _ = built_doc
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-assemble-document"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "document assembly")
+    try:
+        assemble_document(frames, REG)
+        node_count_report(frames)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup(group)) >= 2 * len(frames)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_node_count_report(built_doc):
     frames, _ = built_doc
     assert node_count_report(frames) == [("diagnosis", 2), ("participant", 2)]

@@ -113,3 +113,39 @@ def test_run_study_bad_mapping_aborts(spark, study_inputs):
     bad = MAPPINGS + [{"output_field": "participant.not_real", "source_field": "usi"}]
     with pytest.raises(ValueError, match="unknown output property"):
         run_study(spark, sources=study_inputs, mappings=bad, row_identity=("usi",))
+
+
+def test_run_study_duplicate_ids_name_first_node_in_registry_order(spark, study_inputs):
+    """The per-node checks run concurrently; with duplicates in two
+    nodes the error still names the first in registry order
+    (participant before laboratory_test), whichever check ends first."""
+    labs = study_inputs["laboratory_test"]
+    subjects = study_inputs["participant"]
+    sources = {
+        "laboratory_test": labs.unionByName(labs),
+        "participant": subjects.unionByName(subjects),
+    }
+    for _ in range(3):
+        with pytest.raises(ValueError, match="duplicate participant id"):
+            run_study(spark, sources=sources, mappings=MAPPINGS, row_identity=("usi",))
+
+
+def test_duplicate_id_checks_run_in_callers_job_group(spark, study_inputs):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-run-study-dup-checks"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "duplicate-id checks")
+    try:
+        frames = run_study(
+            spark,
+            sources=study_inputs,
+            mappings=MAPPINGS,
+            uuid_seed="study1",
+            row_identity=("usi",),
+            parent_links={"survival": ("participant", "usi")},
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup(group)) >= len(frames)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
