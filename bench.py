@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -459,18 +460,17 @@ def _ensure_scaled(spark, sf_dir: str, out_dir: str, factor: int) -> None:
 
 
 def bench_round(repo_dir: str) -> int:
-    """This run's round label = max committed BENCH_r<N> + 1, DIGITS-ONLY
-    tags: the driver also commits suffixed artifacts (BENCH_r12_c8.json,
-    the low-core scaling run) — the old inline int() over every
-    BENCH_r*.json crashed the whole bench at round-label time (found on
-    the r13 entry baseline run: ValueError '12_c8', rc != 0, no stdout
-    line for the driver to parse)."""
+    """This run's round label = max committed BENCH_r<N> + 1, ASCII
+    DIGITS-ONLY tags: suffixed artifacts (BENCH_r12_c8.json, the
+    low-core scaling run) and non-ASCII digits (``str.isdigit`` accepts
+    "²", which ``int`` rejects) would otherwise crash the bench at
+    round-label time and lose the stdout line."""
     rounds = [
         int(tag)
         for f in os.listdir(repo_dir)
         if f.startswith("BENCH_r") and f.endswith(".json")
         for tag in [f[len("BENCH_r"):-len(".json")]]
-        if tag.isdigit()
+        if re.fullmatch(r"[0-9]+", tag)
     ]
     return (max(rounds) if rounds else 0) + 1
 

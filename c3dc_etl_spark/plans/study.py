@@ -10,8 +10,10 @@ gets back validated node frames / a schema-valid harmonized document.
 
 Execution shape: everything up to the optional assertions and the
 document collect is LAZY — per-node builds are narrow projections over
-the source scans, link wiring adds one small groupBy per relationship,
-and Catalyst sees the whole study as a handful of independent plans.
+the source scans (row numbering is one of them: its only job runs when
+the source is read, ``sources/rownum.py``), link wiring adds one small
+groupBy per relationship, and Catalyst sees the whole study as a
+handful of independent plans.
 The assertions and the document collect are one small action per node;
 they run concurrently, so the executors are not idle between them.
 """

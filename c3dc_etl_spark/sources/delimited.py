@@ -46,7 +46,10 @@ def read_delimited(
     - ``id_column``: drop rows where this column is blank (P1);
     - ``row_numbers``: add `source_file_row_num` starting at
       ``rownum_start`` (P3; 2 = first data line of a headered file),
-      applied AFTER the row filter like the reference.
+      applied AFTER the row filter like the reference. This runs one
+      small eager aggregate (one row per split) at read time; the
+      returned frame numbers rows with a narrow projection inside the
+      scan (``sources/rownum.py``).
     """
     path = normalize_path(path)
     df = spark.read.option("header", True).option("sep", sep).csv(path)

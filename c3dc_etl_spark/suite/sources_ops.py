@@ -43,9 +43,9 @@ def source_delimited_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2+S3+P1+P3 through sources.read_delimited: TSV scan with all
     cells untyped, blank-header column pruned, blank-id rows dropped,
     then scan-order row numbers starting at 2 (petl.addrownumbers
-    parity) assigned WITHOUT a global sort (monotonic-id + split-offset
-    two-phase). Fixture ids ascend in file order, so the oracle can
-    restate scan order as ORDER BY id."""
+    parity) assigned inside the scan, without a sort or a shuffle.
+    Fixture ids ascend in file order, so the oracle can restate scan
+    order as ORDER BY id."""
     return read_delimited(
         spark, TSV, sep="\t", prune_headerless=True, id_column="id", row_numbers=True
     )

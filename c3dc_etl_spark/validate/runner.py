@@ -30,8 +30,9 @@ from c3dc_etl_spark.schema.registry import SchemaRegistry
 
 def frame_violations(df: DataFrame, node: str, registry: SchemaRegistry) -> DataFrame:
     """Distributed X1: one output row per (record id, property, error).
-    The checks are generated from the node schema; each is a codegen
-    predicate, the union is a single pass over the frame."""
+    The checks are generated from the node schema. Each is a codegen
+    predicate in its own filtered select, and the result is their union:
+    one pass over the frame's lineage per (property, check)."""
     node_def = registry.node(node)
     id_col = (
         F.col(node_def.id_field).cast("string")

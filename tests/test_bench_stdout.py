@@ -86,3 +86,13 @@ def test_bench_round_ignores_suffixed_artifacts(tmp_path):
     for f in tmp_path.iterdir():
         f.unlink()
     assert bench.bench_round(str(tmp_path)) == 1
+
+
+def test_bench_round_rejects_non_ascii_digit_tags(tmp_path):
+    """``"²".isdigit()`` is True but ``int("²")`` raises: such a tag must
+    be skipped, not crash the round label."""
+    for name in ("BENCH_r².json", "BENCH_r12_c8.json"):
+        (tmp_path / name).write_text("{}")
+    assert bench.bench_round(str(tmp_path)) == 1
+    (tmp_path / "BENCH_r7.json").write_text("{}")
+    assert bench.bench_round(str(tmp_path)) == 8

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import pathlib
+import random
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
 from c3dc_etl_spark.mapping.model import load_mappings
 from c3dc_etl_spark.sources import (
@@ -35,6 +38,90 @@ def test_delimited_scan_prunes_filters_numbers(spark):
     # the dropped row
     assert [rows[k]["source_file_row_num"] for k in ("101", "102", "104", "105")] == [2, 3, 4, 5]
     assert rows["104"]["dose"] is None  # untyped cells, empty -> null
+
+
+@contextmanager
+def _file_conf(spark, **conf):
+    """Set ``spark.sql.files.<key>`` values; restore (or unset) on exit."""
+    keys = {f"spark.sql.files.{k}": v for k, v in conf.items()}
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _write_sources(root, sizes, seed=7):
+    """One CSV per (name, rows) with ~10% blank ids; returns the
+    reference numbering: files in name order, lines in file order,
+    blank ids skipped."""
+    rnd = random.Random(seed)
+    ids = []
+    for name, n in sorted(sizes.items()):
+        lines = ["pid,val"]
+        for i in range(n):
+            pid = rnd.choice(["", "  "]) if rnd.random() < 0.1 else f"{name}-{i}"
+            lines.append(f"{pid},{'v' * rnd.randint(1, 24)}")
+            if pid.strip():
+                ids.append(pid)
+        (root / name).write_text("\n".join(lines) + "\n")
+    return ids
+
+
+def test_delimited_row_numbers_match_file_order_across_splits(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    ids = _write_sources(src, {"a.csv": 3000, "b.csv": 2500, "c.csv": 3000,
+                               "d.csv": 2, "e.csv": 3})
+    with _file_conf(spark, maxPartitionBytes="16k", openCostInBytes="1k"):
+        df = read_delimited(spark, str(src), id_column="pid", row_numbers=True,
+                            rownum_start=1)
+        files_per_split = (
+            df.select(F.spark_partition_id().alias("p"), F.input_file_name().alias("f"))
+            .distinct().groupBy("p").count().collect()
+        )
+        got = {r["pid"]: r["source_file_row_num"] for r in df.collect()}
+    assert len(files_per_split) >= 4
+    assert max(r["count"] for r in files_per_split) >= 2  # small files packed
+    assert got == {pid: n for n, pid in enumerate(ids, start=1)}
+
+
+def test_delimited_row_numbers_header_only_file(spark, tmp_path):
+    (tmp_path / "h.csv").write_text("pid,val\n")
+    df = read_delimited(spark, str(tmp_path / "h.csv"), id_column="pid", row_numbers=True)
+    assert df.columns == ["pid", "val", "source_file_row_num"]
+    assert df.collect() == []
+
+
+def test_delimited_row_numbers_fail_on_changed_split_layout(spark, tmp_path):
+    """Numbers are fixed at read time; an action that sees another split
+    layout must fail, never renumber."""
+    _write_sources(tmp_path, {"a.csv": 3000, "b.csv": 3000})
+    with _file_conf(spark, maxPartitionBytes="32k"):
+        df = read_delimited(spark, str(tmp_path), id_column="pid", row_numbers=True)
+    with _file_conf(spark, maxPartitionBytes="20k"):
+        with pytest.raises(Exception, match="split layout of .* changed since the read"):
+            df.collect()
+
+
+def test_delimited_row_numbers_fail_on_file_rewritten_in_place(spark, tmp_path):
+    """Same path, same byte size, more rows: the split key still matches,
+    so the per-split id range is what must catch it."""
+    f = tmp_path / "a.csv"
+    f.write_text("pid,val\n" + "".join(f"{i:02d},vvvvvvv\n" for i in range(10)))
+    size = f.stat().st_size
+    df = read_delimited(spark, str(f), id_column="pid", row_numbers=True)
+    more = "pid,val\n" + "".join(f"{i:02d},v\n" for i in range(15))
+    f.write_text(more + "99," + "v" * (size - len(more) - 4) + "\n")
+    assert f.stat().st_size == size
+    with pytest.raises(Exception, match="split layout of .* changed since the read"):
+        df.collect()
 
 
 def test_jsondir_duplicate_resolution(spark):
