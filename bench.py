@@ -192,9 +192,9 @@ SCALE_CORE = [
 # PRIORITY. Round 12 (VERDICT r11 asks #1/#6/#7/#8): the growth tier
 # (capped SemDeDup + the two DV-protocol queries) lands with its x5
 # rows, the prefix-filter watch item gets an x5 re-read, and the
-# iterative duo receiving x25 VOLUME probes this round
-# (scripts/graph_volume_probe.py) re-read their x5 walls under
-# the current sizing). The r10 cohort's rows live in
+# iterative duo receiving x25 VOLUME probes this round re-read their
+# x5 walls under the current sizing; A/B a variant of any of them
+# with scripts/ab.py). The r10 cohort's rows live in
 # SCALE_LEDGER.json; rotating them out loses nothing (cumulative).
 SCALE_ROTATION = [
     # round 12 (VERDICT r11 asks #1/#6): the new at-scale SemDeDup form
@@ -494,7 +494,8 @@ def stdout_line(
     rotation map is the one moved off stdout (it lives in full in
     BENCH_DETAIL.json "rotation"; scripts/rotate_cohorts.
     benched_and_times still sees rotation rows via BENCH_DETAIL);
-    "queries" is only ever truncated as the last resort."""
+    "queries" is truncated next, and the ``cohort`` text last, so the
+    line never exceeds ``budget`` once the fixed fields fit."""
     headline = {
         "metric": "suite_wall",
         "value": result["value"],
@@ -514,6 +515,14 @@ def stdout_line(
         # never let the headline outgrow the tail capture again: drop
         # the per-query map before the driver loses the whole line
         headline["queries"] = {"_truncated": len(times)}
+        line = json.dumps(headline)
+    keep = len(cohort)
+    while len(line) > budget and keep:
+        # the caller's cohort text is cut last. One char costs 1 to 12
+        # json chars (an escaped surrogate pair), so cutting overshoot/12
+        # chars per step never cuts more than the budget needs.
+        keep = max(0, keep - max(1, (len(line) - budget) // 12))
+        headline["cohort"] = cohort[:keep]
         line = json.dumps(headline)
     return line
 

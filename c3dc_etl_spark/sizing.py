@@ -4,14 +4,22 @@ reducers (operators/iterscope.py): enough partitions that each carries
 at most a per-partition byte budget, rounded up to a power of two
 (keeps modulo hash distribution even and successive resizes
 comparable), clamped. Partition counts derive from DATA VOLUME, never
-from a core count — the discipline both call sites document.
+from a core count — the discipline both call sites document. Broadcast
+gates compare a worst-case byte estimate against one driver-memory
+budget (``broadcast_budget_bytes``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
-__all__ = ["parquet_column_range", "parquet_row_count", "sized_partitions"]
+__all__ = [
+    "broadcast_budget_bytes",
+    "parquet_column_range",
+    "parquet_row_count",
+    "sized_partitions",
+]
 
 
 def sized_partitions(
@@ -35,6 +43,31 @@ def sized_partitions(
     if max_partitions is not None:
         parts = min(parts, max_partitions)
     return parts
+
+
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def _memory_string_bytes(raw: str) -> int:
+    """Bytes of a JVM memory setting such as ``4g`` or ``512m``; a bare
+    number is MiB, as Spark reads ``spark.driver.memory``."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", raw.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {raw!r}")
+    return int(m.group(1)) * _MEM_UNITS[m.group(2) or "m"]
+
+
+def broadcast_budget_bytes(spark) -> int:
+    """Bytes that one query's broadcasts may take together: one
+    sixteenth of ``spark.driver.memory`` (Spark's 1g default when
+    unset). In local mode the driver JVM holds each broadcast about
+    three times at its peak — the collected rows, the built hashed
+    relation and its serialized blocks — beside the rest of the query's
+    working memory, so a gate compares its worst-case raw-byte estimate
+    against this small fixed share of the heap rather than against a
+    row count tuned on one machine."""
+    raw = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    return _memory_string_bytes(raw) // 16
 
 
 _ROW_COUNT_CACHE: dict[str, int] = {}
@@ -79,8 +112,8 @@ def parquet_column_range(path: str, column: str) -> tuple | None:
     when any row group lacks stats for the column, so callers can only
     ever use the range as a PROVEN bound: the degraded path must be
     correct without it. Used to pick between result-identical plan
-    shapes (e.g. link prediction's packed-key pair aggregate needs the
-    key provably in [0, 2^32)); testdata is immutable, so caching per
+    shapes (link prediction's packed-key anti-join needs the part keys
+    provably in [0, 2^32)); testdata is immutable, so caching per
     (path, column) is safe for the session."""
     key = (path, column)
     if key in _COLUMN_RANGE_CACHE:

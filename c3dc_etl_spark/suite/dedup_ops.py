@@ -656,7 +656,6 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence join (narrow integer rows only); both reuse one
     pinned hashed-shingle projection."""
     from c3dc_etl_spark.pinning import pin
-    from c3dc_etl_spark.sizing import parquet_row_count
 
     docs = load(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_candidates(
@@ -679,30 +678,21 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dv"),
         )
     )
-    # Round-13 volume-guarded prune (guide §3.2, VERDICT r12 ask #5):
-    # only ~10% of docs appear in ANY candidate pair (measured 0.096 at
-    # sf0.1 AND x5), so restricting the exact co-occurrence self-join to
-    # candidate docs cuts its pair volume ~100x — results identical
-    # because co rows for non-candidate pairs are dropped by the final
-    # left join anyway. The prune's fixed costs (pin(pairs), the
-    # distinct, the broadcast, a blocked explode pipeline) only amortize
-    # at volume: interleaved A/B read a consistent ~30% win at the x5
-    # working set ([12.9, 11.5, 11.7, 10.1]s noop vs [8.5, 8.0, 7.4,
-    # 7.5]) but a slight LOSS at sf0.1 ([5.6, 4.9, 5.3] vs [5.6, 5.2,
-    # 6.8]) — hence the footer-row-count gate (driver-side metadata
-    # read, no job), r12's unguarded form stays off below it.
-    if parquet_row_count(f"{sf_dir}/documents.parquet") >= 20_000:
-        pairs = pin(pairs)
-        cand_docs = (
-            pairs.select(F.col("id_a").alias("doc"))
-            .unionAll(pairs.select(F.col("id_b").alias("doc")))
-            .distinct()
-        )
-        ex = hashed.join(F.broadcast(cand_docs), "doc", "left_semi").select(
-            "doc", F.explode("dv").alias("h")
-        )
-    else:
-        ex = hashed.select("doc", F.explode("dv").alias("h"))
+    # Only ~10% of docs appear in ANY candidate pair (measured 0.096 at
+    # sf0.1 and x5), so the exact co-occurrence self-join runs over
+    # candidate docs only and its pair volume drops ~100x; results are
+    # identical because co rows of non-candidate pairs are dropped by
+    # the final left join anyway. pin: pairs feeds the doc set and that
+    # left join.
+    pairs = pin(pairs)
+    cand_docs = (
+        pairs.select(F.col("id_a").alias("doc"))
+        .unionAll(pairs.select(F.col("id_b").alias("doc")))
+        .distinct()
+    )
+    ex = hashed.join(F.broadcast(cand_docs), "doc", "left_semi").select(
+        "doc", F.explode("dv").alias("h")
+    )
     a = ex.select(F.col("doc").alias("id_a"), "h")
     b = ex.select(F.col("doc").alias("id_b"), "h")
     co = (

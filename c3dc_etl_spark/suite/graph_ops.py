@@ -309,6 +309,7 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
     from c3dc_etl_spark.operators.dedup import drop_oversized_groups
     from c3dc_etl_spark.pinning import pin
     from c3dc_etl_spark.sizing import (
+        broadcast_budget_bytes,
         parquet_column_range,
         parquet_row_count,
         sized_partitions,
@@ -323,41 +324,27 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
     packable = (
         pk_range is not None and 0 <= pk_range[0] and pk_range[1] < 2**32
     )
-    # Round-13 optimization (guide §2.4 "remove shuffles outright",
-    # §3.1): every wedge contribution to a pair (x, y) carries the same
-    # SMALLER endpoint x (pairs are generated x < y from the middle's
-    # sorted neighbor array), so hash-partitioning the per-middle
-    # generation rows by x makes HashPartitioning(x) satisfy the
-    # groupBy(x, y) distribution — the 147M wedge rows and the ~100M
-    # candidate groups NEVER cross an exchange, the per-partition
-    # aggregate is globally exact, and the top-k is a per-partition
-    # TakeOrdered. The wedge SortMergeJoin is gone too: pairs explode
-    # from capped sorted neighbor arrays joined back by BROADCAST
-    # (arrays payload == capped adjacency entries <= 6 * lineitem rows;
-    # guarded to <= 4M rows i.e. <= ~24M entries / ~200 MB worst case,
-    # stating the ADVICE r12 bound honestly: co-order edge keys can
-    # reach 3x lineitem rows, not 1x — measured fine at 3M rows/48g,
-    # and the x5 cross-validation below is the reason the gate sits at
-    # 4M). Generation is codegen explode + post-filter (the
+    # Fast shape: every wedge contribution to a pair (x, y) carries the
+    # same SMALLER endpoint x (pairs are generated x < y from the
+    # middle's sorted neighbor array), so hash-partitioning the
+    # per-middle generation rows by x makes HashPartitioning(x) satisfy
+    # the groupBy(x, y) distribution — the wedge rows and candidate
+    # groups never cross an exchange, the per-partition aggregate is
+    # globally exact, and the top-k is a per-partition TakeOrdered.
+    # Pairs explode from capped sorted neighbor arrays joined back by
+    # BROADCAST; generation is codegen explode + post-filter (the
     # higher-order filter(ns, t -> t > x) lambda evaluates interpreted
-    # per ELEMENT — measured 3x slower); the existing-edge anti-join
-    # probes a PACKED single-long broadcast key (LongHashedRelation —
-    # measured 10x faster than the two-column UnsafeHashedRelation
-    # over the wedge stream: 2.2s vs 20s) BEFORE the aggregate, so
-    # triangle wedges never enter the hash maps. Interleaved quiet-box
-    # A/B at sf0.1 (3 rounds, rows identical): r12 packed shape
-    # [15.8, 30.4, 18.8]s noop vs this [10.1, 8.5, 9.7] (64 parts) /
-    # [16.1, 8.2, 8.3] (128 parts). x5 cross-validation (lineitem 3M
-    # rows): the r12 SMJ shape read 239.6s noop vs 62.4s for this
-    # shape, rows identical — which is why the gate is 4M, not the
-    # bench-sized 1.5M.
-    if packable and li_rows <= 4_000_000:
-        # capped sorted neighbor arrays per middle: the size filter is
-        # the same cap semantics as drop_oversized_groups (count > cap
-        # dropped); at <= 4M lineitem rows the worst-case single
-        # array buffer is bounded by the adjacency itself (~200 MB,
-        # physically far smaller) so collect_list without a pre-count
-        # is safe in this branch.
+    # per element, measured 3x slower). The existing-edge anti-join
+    # probes a PACKED single-long broadcast key (footer stats prove the
+    # part keys fit [0, 2^32)): a LongHashedRelation probe measured 10x
+    # faster than the two-column one, and running it BEFORE the
+    # aggregate keeps triangle wedges out of the hash maps.
+    # Both broadcasts are bounded per lineitem row: <= 6 array entries
+    # (capped adjacency entries: co-order edges reach 3x lineitem rows,
+    # each mirrored) plus <= 3 packed edge keys, 8 bytes each.
+    if packable and li_rows * (6 + 3) * 8 <= broadcast_budget_bytes(spark):
+        # the size filter is the same cap semantics as
+        # drop_oversized_groups (count > cap dropped)
         nbrs = pin(
             adj.groupBy("m")
             .agg(F.array_sort(F.collect_list("n")).alias("ns"))
@@ -391,75 +378,28 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
             .groupBy("x", "y")
             .agg(F.count(F.lit(1)).alias("cn"))
         )
-        return (
-            cand.select(
-                F.col("x").cast("bigint").alias("part_a"),
-                F.col("y").cast("bigint").alias("part_b"),
-                F.col("cn").cast("bigint").alias("common_neighbors"),
-            )
-            .orderBy(
-                F.col("common_neighbors").desc(),
-                F.col("part_a").asc(),
-                F.col("part_b").asc(),
-            )
-            .limit(LP_TOP_K)
-        )
-    # degree cap on the middle role == group-size cap on m (map-side
-    # combined count + anti-join, never a partitionBy(m) window).
-    # pin: mid feeds BOTH sides of the wedge self-join — without the
-    # pin the adjacency + cap chain is derived twice (round-12 A/B:
-    # pin alone took the query 66 -> 38s at sf0.1).
-    mid = pin(drop_oversized_groups(adj, ["m"], LP_HUB_CAP))
-    wa = mid.select("m", F.col("n").alias("x"))
-    wb = mid.select("m", F.col("n").alias("y"))
-    wedge_pairs = wa.join(wb, "m").filter(F.col("x") < F.col("y"))
-    # Round-12 optimization (guide §2.3 "narrower types" / §2.4): the
-    # wedge aggregate is the whole query — sum(C(deg_m, 2)) rows
-    # hash-aggregated into the candidate (x, y) groups. When the
-    # parquet footer PROVES part keys fit in [0, 2^32) (driver-side
-    # stats read, no job), the pair key packs into ONE bigint
-    # (x * 2^32 + y, bijective): half the shuffle bytes per wedge row
-    # and a single-long group key for the hash aggregate. This branch
-    # only runs past the 4M-row arrays-broadcast gate above, where the
-    # edge set (up to 3x lineitem rows — ADVICE r12) is too big to
-    # ship either, so the anti-join runs AFTER the aggregate where it
-    # reuses the aggregate's k-partitioning. Footer stats missing or
-    # keys out of range -> the original struct-keyed shape.
-    # A/B at sf0.1 (identical rows, noop sink, round 12): struct base
-    # 64-68s, packed 20-25s.
-    if packable:
-        packed_edges = edges.select(
-            (F.shiftleft(F.col("u").cast("long"), 32) + F.col("v")).alias("k")
-        )
-        wedge_keys = wedge_pairs.select(
-            (F.shiftleft(F.col("x").cast("long"), 32) + F.col("y")).alias("k")
-        )
-        cand = (
-            wedge_keys.groupBy("k")
+    else:
+        # Fallback, correct on every input (keys outside [0, 2^32),
+        # files without footer stats, broadcasts past the budget): the
+        # wedge self-join on the capped middle, a struct-keyed
+        # aggregate, then the anti-join. Degree cap on the middle role
+        # == group-size cap on m (map-side combined count + anti-join,
+        # never a partitionBy(m) window). pin: mid feeds BOTH sides of
+        # the wedge self-join.
+        mid = pin(drop_oversized_groups(adj, ["m"], LP_HUB_CAP))
+        wa = mid.select("m", F.col("n").alias("x"))
+        wb = mid.select("m", F.col("n").alias("y"))
+        wedges = (
+            wa.join(wb, "m")
+            .filter(F.col("x") < F.col("y"))
+            .groupBy("x", "y")
             .agg(F.count(F.lit(1)).alias("cn"))
-            .join(packed_edges, "k", "left_anti")
         )
-        return (
-            cand.select(
-                F.shiftrightunsigned(F.col("k"), 32).cast("bigint").alias("part_a"),
-                F.col("k").bitwiseAND(F.lit(0xFFFFFFFF)).cast("bigint").alias(
-                    "part_b"
-                ),
-                F.col("cn").cast("bigint").alias("common_neighbors"),
-            )
-            .orderBy(
-                F.col("common_neighbors").desc(),
-                F.col("part_a").asc(),
-                F.col("part_b").asc(),
-            )
-            .limit(LP_TOP_K)
+        cand = wedges.join(
+            edges.select(F.col("u").alias("x"), F.col("v").alias("y")),
+            ["x", "y"],
+            "left_anti",
         )
-    wedges = wedge_pairs.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cn"))
-    cand = wedges.join(
-        edges.select(F.col("u").alias("x"), F.col("v").alias("y")),
-        ["x", "y"],
-        "left_anti",
-    )
     return (
         cand.select(
             F.col("x").cast("bigint").alias("part_a"),
@@ -473,7 +413,6 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .limit(LP_TOP_K)
     )
-
 
 BFS_SOURCE = "c:1"
 BFS_MAX_HOPS = 3

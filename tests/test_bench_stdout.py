@@ -96,3 +96,18 @@ def test_bench_round_rejects_non_ascii_digit_tags(tmp_path):
     assert bench.bench_round(str(tmp_path)) == 1
     (tmp_path / "BENCH_r7.json").write_text("{}")
     assert bench.bench_round(str(tmp_path)) == 8
+
+
+def test_long_cohort_truncated_to_budget():
+    """A caller-supplied cohort longer than the whole budget is the last
+    thing cut: the line still parses and fits."""
+    long_cohort = "r13 rotation é\"x " * 400
+    line = bench.stdout_line(
+        _result(), _fake(bench.HEADLINE), _fake(bench.ROTATION),
+        1.0, long_cohort, 0.1, budget=600,
+    )
+    rec = json.loads(line)
+    assert len(line) <= 600
+    assert long_cohort.startswith(rec["cohort"]) and rec["cohort"]
+    assert rec["queries"] == {"_truncated": len(bench.HEADLINE)}
+    assert rec["value"] == 50.125

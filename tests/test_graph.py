@@ -210,3 +210,47 @@ def test_default_driver_mem_derivation():
     assert 4 <= n <= 48
     if memory_limit_bytes() >= 110 * 1024**3:  # the 128 GiB class box
         assert n == 48
+
+
+def test_link_prediction_fallback_without_footer_stats(spark, monkeypatch):
+    """A lineitem file without footer stats cannot prove the part keys
+    fit the packed broadcast key, so link prediction takes the
+    struct-keyed fallback: no packed key and no array explode in its
+    plan, and the same top-k rows as the fast shape."""
+    from conftest import SF0001 as sf
+
+    from c3dc_etl_spark import sizing
+    from c3dc_etl_spark.pinning import release_pinned
+    from c3dc_etl_spark.suite.graph_ops import link_prediction_common_neighbors
+
+    fast = link_prediction_common_neighbors(spark, sf)
+    fast_plan = fast._jdf.queryExecution().executedPlan().toString()
+    fast_rows = sorted(fast.collect())
+    release_pinned()
+    assert "shiftleft" in fast_plan and "Generate" in fast_plan
+
+    monkeypatch.setattr(sizing, "parquet_column_range", lambda path, col: None)
+    slow = link_prediction_common_neighbors(spark, sf)
+    slow_plan = slow._jdf.queryExecution().executedPlan().toString()
+    slow_rows = sorted(slow.collect())
+    release_pinned()
+    assert "shiftleft" not in slow_plan and "Generate" not in slow_plan
+    assert len(fast_rows) > 0
+    assert slow_rows == fast_rows
+
+
+def test_broadcast_budget_from_driver_memory(spark):
+    """One sixteenth of spark.driver.memory; a bare number is MiB. Any
+    default heap (4g or more) keeps link prediction's fast shape
+    (<= 72 broadcast bytes per lineitem row) through sf0.1's 600k
+    lineitem rows."""
+    from c3dc_etl_spark import sizing
+
+    assert sizing._memory_string_bytes("4g") == 4 << 30
+    assert sizing._memory_string_bytes("512m") == 512 << 20
+    assert sizing._memory_string_bytes("2048") == 2 << 30
+    raw = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    budget = sizing.broadcast_budget_bytes(spark)
+    assert budget == sizing._memory_string_bytes(raw) // 16
+    if sizing._memory_string_bytes(raw) >= 4 << 30:
+        assert 600_000 * 72 <= budget
