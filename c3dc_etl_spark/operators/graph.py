@@ -171,6 +171,12 @@ def bfs_hops(
     the minimum hop count by BFS invariant — equivalently the DuckDB
     recursive-CTE formulation ``MIN(hops) GROUP BY node`` over the
     deduplicated level-expansion (the oracle's form).
+
+    ``source`` follows the edge list's node representation: an ``int``
+    for integral ``src`` columns (long-encoded node ids), a ``str`` for
+    string ones. Any other type, a ``bool``, or a seed whose type does
+    not match ``src`` raises ``TypeError`` instead of joining on an
+    implicit cast; the output ``node`` column is bigint or string.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.localCheckpoint(eager=True)
@@ -222,7 +228,11 @@ def sssp_bounded(
     count. Unlike bfs_hops there is no visited-set anti-join: a node's
     distance can improve in a later round (cheaper long path), so every
     round re-relaxes the full frame; the frame is bounded by the
-    reachable node set."""
+    reachable node set.
+
+    ``source`` has ``bfs_hops``'s contract: an ``int`` over integral
+    ``src`` columns, a ``str`` over string ones, ``TypeError`` for
+    anything else."""
     e = edges.select(
         F.col(src).alias("u"),
         F.col(dst).alias("v"),

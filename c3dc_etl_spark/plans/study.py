@@ -16,10 +16,14 @@ groupBy per relationship, and Catalyst sees the whole study as a
 handful of independent plans.
 The assertions and the document collect are one small action per node;
 they run concurrently, so the executors are not idle between them.
+``run_study_to_document`` runs no separate assertion action: the
+document's records come back sorted by id, and D3 reads the duplicates
+off them before any validation or output.
 """
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +39,10 @@ from c3dc_etl_spark.sink import assemble_document
 from c3dc_etl_spark.validate import validate_document
 
 
+def _duplicate_id(node: str, value: object, n: int) -> ValueError:
+    return ValueError(f"duplicate {node} id: {value!r} (x{n})")
+
+
 def _assert_unique_ids(df: DataFrame, node: str, id_field: str) -> None:
     """D3/D4: duplicate `<node>_id` values abort the run (reference
     raises, etl/ccdi/c3dc_etl.py:1475-1485)."""
@@ -46,7 +54,20 @@ def _assert_unique_ids(df: DataFrame, node: str, id_field: str) -> None:
         .collect()
     )
     if dupe:
-        raise ValueError(f"duplicate {node} id: {dupe[0][id_field]!r} (x{dupe[0]['n']})")
+        raise _duplicate_id(node, dupe[0][id_field], dupe[0]["n"])
+
+
+def _assert_unique_sorted_ids(doc: dict, registry: SchemaRegistry) -> None:
+    """D3 over an assembled document, whose records are sorted by id:
+    the first run of adjacent equal ids raises ``_assert_unique_ids``'s
+    message, checking nodes in registry order."""
+    for node in registry.node_names:
+        node_def = registry.node(node)
+        ids = (r.get(node_def.id_field) for r in doc.get(node_def.plural, ()))
+        for value, run in itertools.groupby(ids):
+            n = sum(1 for _ in run)
+            if n > 1:
+                raise _duplicate_id(node, value, n)
 
 
 def run_study(
@@ -134,11 +155,20 @@ def run_study_to_document(
     validate: bool = True,
     **kwargs,
 ) -> dict:
-    """Full reference parity flow: build -> wire -> assemble -> X1
-    validation. Returns the harmonized document dict (K1-ready)."""
+    """Full reference parity flow: build -> wire -> assemble -> D3 ->
+    X1 validation. Returns the harmonized document dict (K1-ready).
+
+    D3 (``assert_unique_ids``, default on) reads the sorted document
+    records instead of running ``run_study``'s per-node check jobs; it
+    raises the same message before validation."""
     registry = kwargs.setdefault("registry", SchemaRegistry())
-    frames = run_study(spark, sources=sources, mappings=mappings, **kwargs)
+    assert_unique_ids = kwargs.pop("assert_unique_ids", True)
+    frames = run_study(
+        spark, sources=sources, mappings=mappings, assert_unique_ids=False, **kwargs
+    )
     doc = assemble_document(frames, registry)
+    if assert_unique_ids:
+        _assert_unique_sorted_ids(doc, registry)
     if validate:
         validate_document(doc, registry)
     return doc

@@ -20,6 +20,26 @@ settings are cluster-safe. Every knob here is a scale decision:
   entries vs 176, then 0-18 at 4096; merge_publish 659, then 644-648
   vs 416, then 0-28; operator_suite 93, then 51 vs 93, then 0.
   ``extra_conf`` overrides it like any other setting.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1
+  wraps every ``Column`` method and ``functions.*`` call in
+  ``pyspark.errors.utils._with_origin``, which walks the Python stack
+  and sends the call site to the JVM: 5-10 extra driver<->JVM round
+  trips per call (warm, ``F.lit(1).alias("x")`` costs 14 with capture
+  and 4 without, ``F.col("a")`` 13 and 3; ``F.expr`` is not wrapped
+  and costs 3 either way). Where IPython is installed it is imported into
+  the driver, and a failing ``import ipykernel`` is retried on every
+  call. Warm perfbench operations (4 cores, seed 51; round trips
+  counted by wrapping py4j's ``GatewayClient.send_command``) made
+  8,394-8,427 round trips with capture on and 4,881-4,912 with it off
+  on study_document, 10,768-10,996 vs 5,884-5,986 on merge_publish;
+  driver peak RSS fell 182.6 -> 160.3 MB and 175.0 -> 153.2 MB. The
+  cost: a Spark analysis error loses its "== DataFrame ==" Python
+  call-site fragment; the engine's own error messages do not change.
+  PySpark reads the value once per Python process
+  (``is_debugging_enabled`` caches it), from the session active at the
+  first Column call, so it must be set when the session is built.
+  ``extra_conf`` overrides it like any other setting.
 
 Note on ``spark.sql.legacy.parquet.nanosAsLong``: the suite's events
 loader (suite/registry.py ``read_events_parquet``) sets it ONLY when a
@@ -148,6 +168,8 @@ def get_spark(app_name: str = "c3dc-etl-spark", **extra_conf: str) -> SparkSessi
         # merge); the default 100-entry cache evicted them between
         # runs — see the module docstring
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # no per-Column call-site capture — see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

@@ -15,17 +15,10 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType
 
 from c3dc_etl_spark.schema.registry import SchemaRegistry
 from c3dc_etl_spark.session import run_concurrently
-
-
-def _clean(value: object) -> object:
-    """Row -> plain JSON value; drop nulls (the reference omits unset
-    properties rather than writing null)."""
-    if isinstance(value, list):
-        return [_clean(v) for v in value]
-    return value
 
 
 def assemble_document(
@@ -36,23 +29,42 @@ def assemble_document(
     ``{plural_node_name: [record dicts]}`` with null properties omitted.
     Records are ordered by the node id field for byte-stable output.
 
-    Each node is one small sorted collect, independent of the others;
+    Each node is one small unsorted collect, independent of the others;
     the collects run concurrently (``session.run_concurrently``), and
-    each thread converts its own Rows to dicts, so no node's Row list
-    outlives its conversion. Keys keep ``node_frames`` order."""
+    each thread converts its own Rows to dicts and sorts them by id on
+    the driver, so no node pays a range-sample job and a sort stage.
+    The order is Spark's ascending string order: null ids first, then
+    by code point, which is the UTF-8 byte order Spark compares. An id
+    column that is not a string raises ``ValueError`` before any
+    collect; a node without its id column keeps collect order. Keys
+    keep ``node_frames`` order."""
     registry = registry or SchemaRegistry()
     if not node_frames:
         return {}
+    sort_keys: dict[str, str | None] = {}
+    for node, df in node_frames.items():
+        id_field = registry.node(node).id_field
+        if id_field not in df.columns:
+            sort_keys[node] = None
+            continue
+        id_type = df.schema[id_field].dataType
+        if not isinstance(id_type, StringType):
+            raise ValueError(
+                f"{node}.{id_field} must be a string column to order the document, "
+                f"got {id_type.simpleString()}"
+            )
+        sort_keys[node] = id_field
 
     def records(node: str) -> list[dict]:
-        df = node_frames[node]
-        id_field = registry.node(node).id_field
-        if id_field in df.columns:
-            df = df.orderBy(id_field)
-        return [
-            {k: _clean(v) for k, v in row.asDict(recursive=True).items() if v is not None}
-            for row in df.collect()
+        recs = [
+            {k: v for k, v in row.asDict(recursive=True).items() if v is not None}
+            for row in node_frames[node].collect()
         ]
+        id_field = sort_keys[node]
+        if id_field is not None:
+            # (present, id): null ids first, as in Spark's ascending order
+            recs.sort(key=lambda r: (id_field in r, r.get(id_field)))
+        return recs
 
     spark = next(iter(node_frames.values())).sparkSession
     per_node = run_concurrently(spark, records, node_frames)

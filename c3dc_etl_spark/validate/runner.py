@@ -30,9 +30,10 @@ from c3dc_etl_spark.schema.registry import SchemaRegistry
 
 def frame_violations(df: DataFrame, node: str, registry: SchemaRegistry) -> DataFrame:
     """Distributed X1: one output row per (record id, property, error).
-    The checks are generated from the node schema. Each is a codegen
-    predicate in its own filtered select, and the result is their union:
-    one pass over the frame's lineage per (property, check)."""
+    The checks are generated from the node schema and run in one pass
+    over the frame: each row builds an array with one
+    ``when(check, struct(property, error))`` entry per check, drops the
+    null entries (checks that passed) and explodes the rest."""
     node_def = registry.node(node)
     id_col = (
         F.col(node_def.id_field).cast("string")
@@ -75,18 +76,20 @@ def frame_violations(df: DataFrame, node: str, registry: SchemaRegistry) -> Data
                 )
             )
 
-    frames = [
-        df.filter(pred).select(
-            id_col.alias("record_id"),
-            F.lit(prop).alias("property"),
-            F.lit(err).alias("error"),
-        )
-        for prop, pred, err in checks
-    ]
-    if not frames:
+    if not checks:
         schema = "record_id string, property string, error string"
         return df.sparkSession.createDataFrame([], schema)
-    return functools.reduce(lambda a, b: a.unionByName(b), frames)
+    failed = F.array_compact(
+        F.array(
+            *[
+                F.when(pred, F.struct(F.lit(prop).alias("property"), F.lit(err).alias("error")))
+                for prop, pred, err in checks
+            ]
+        )
+    )
+    return df.select(id_col.alias("record_id"), F.explode(failed).alias("v")).select(
+        "record_id", "v.property", "v.error"
+    )
 
 
 def referential_violations(

@@ -69,3 +69,14 @@ def test_run_concurrently_reraises_first_failure_in_input_order(spark):
     for _ in range(3):
         with pytest.raises(KeyError, match="first"):
             run_concurrently(spark, fail, range(5))
+
+
+def test_session_turns_off_dataframe_call_site_capture(spark, monkeypatch):
+    """PySpark's per-Column call-site capture costs driver<->JVM round
+    trips on every Column call; get_spark turns it off, and PySpark's
+    cached switch reads it from the active session."""
+    import pyspark.errors.utils as errors_utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    assert errors_utils.is_debugging_enabled() is False

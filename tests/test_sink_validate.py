@@ -5,13 +5,16 @@ etl/target/test/test_c3dc_etl.py:439-449)."""
 from __future__ import annotations
 
 import json
-
+from collections import Counter
+from functools import reduce
 
 import pytest
+from pyspark.sql import functions as F
 
 from c3dc_etl_spark.harmonize.builder import build_node
 from c3dc_etl_spark.mapping.compiler import CompilerContext
 from c3dc_etl_spark.mapping.model import load_mappings
+from c3dc_etl_spark.schema.model import MODEL, NodeDef, PropDef
 from c3dc_etl_spark.schema.registry import SchemaRegistry
 from c3dc_etl_spark.sink import assemble_document, node_count_report, save_harmonized_json
 from c3dc_etl_spark.validate import (
@@ -168,3 +171,148 @@ def test_responses_without_treatment(spark):
     assert set(rows) == {"p1"}  # p2 has a treatment
     assert rows["p1"]["n_responses"] == 2
     assert rows["p1"]["n_complete_remission"] == 1
+
+
+def test_assemble_document_orders_like_spark_order_by(spark):
+    """The driver-side sort gives Spark's ascending string order: null
+    first, UTF-8 byte order (= code point order, so U+FF21 sorts before
+    an astral-plane id although UTF-16 would put it after), "10" before
+    "9". A node without its id column keeps collect order."""
+    ids = ["b", "10", "9", None, "\U0001F600", "\uFF21", "é", "Z", "a", "ä", "100"]
+    participants = spark.createDataFrame(
+        [(pid, "Female" if i % 2 else None) for i, pid in enumerate(ids)],
+        "participant_id string, sex_at_birth string",
+    ).repartition(3)
+    no_id = spark.createDataFrame([("x",), ("c",), (None,), ("a",)], "diagnosis string")
+    doc = assemble_document({"participant": participants, "diagnosis": no_id}, REG)
+
+    def dicts(rows):
+        return [{k: v for k, v in r.asDict(recursive=True).items() if v is not None} for r in rows]
+
+    assert doc == {
+        "participants": dicts(participants.orderBy("participant_id").collect()),
+        "diagnoses": dicts(no_id.collect()),
+    }
+    assert [r.get("participant_id") for r in doc["participants"]][:4] == [None, "10", "100", "9"]
+    assert [r.get("diagnosis") for r in doc["diagnoses"]] == ["x", "c", None, "a"]
+
+
+def test_assemble_document_rejects_non_string_id_before_collect(spark):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-assemble-non-string-id"
+    frames = {
+        "diagnosis": spark.createDataFrame([("d1",)], "diagnosis_id string"),
+        "participant": spark.createDataFrame([(2,), (1,)], "participant_id bigint"),
+    }
+    sc.setJobGroup(group, "non-string id")
+    try:
+        with pytest.raises(ValueError, match=r"participant\.participant_id .*bigint"):
+            assemble_document(frames, REG)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup(group) == []
+
+
+# A node that seeds every compiled check class (its id is optional, so a
+# frame may leave it out); "bare" has no checks.
+PROBE_REG = SchemaRegistry(
+    {
+        **MODEL,
+        "probe": NodeDef(
+            "probe",
+            (
+                PropDef("probe_id"),
+                PropDef("name", required=True),
+                PropDef("kinds", "array", enum=("a", "b"), required=True),
+                PropDef("size", "integer", required=True, maximum=10, minimum=0),
+                PropDef("color", enum=("red", "blue")),
+                PropDef("tags", "array"),
+            ),
+        ),
+        "bare": NodeDef("bare", (PropDef("bare_id"), PropDef("note"))),
+    }
+)
+
+PROBE_ROWS = [
+    # probe_id, name, kinds, size, color, tags
+    ("ok", "n", ["a"], 5, "red", ["t"]),
+    ("blank-name", "  ", ["a"], 5, None, None),
+    ("null-name", None, ["b"], 1, None, None),
+    ("null-kinds", "n", None, 1, None, None),
+    ("empty-kinds", "n", [], 1, None, None),
+    ("null-size", "n", ["a"], None, None, None),
+    ("bad-color", "n", ["a"], 1, "green", None),
+    ("bad-kind", "n", ["a", "c"], 1, None, None),
+    ("too-big", "n", ["a"], 11, None, None),
+    ("too-small", "n", ["a"], -1, None, None),
+    ("dup-kinds", "n", ["a", "a"], 1, None, None),
+    ("dup-tags", "n", ["a"], 1, None, ["t", "t"]),
+    # several violations on one record
+    ("many", "", ["c", "c"], 99, "green", ["t", "t"]),
+]
+PROBE_SCHEMA = (
+    "probe_id string, name string, kinds array<string>, size bigint, "
+    "color string, tags array<string>"
+)
+_REQUIRED = "required property missing"
+_ENUM = "value not in permissible list"
+_UNIQUE = "array items not unique"
+# (property, predicate, error): each check of the probe node, written out
+PROBE_CHECKS = [
+    ("name", "name IS NULL OR trim(name) = ''", _REQUIRED),
+    ("kinds", "kinds IS NULL OR size(filter(kinds, v -> v IS NOT NULL)) = 0", _REQUIRED),
+    ("kinds", "size(array_except(kinds, array('a', 'b'))) > 0", _ENUM),
+    ("kinds", "size(kinds) != size(array_distinct(kinds))", _UNIQUE),
+    ("size", "size IS NULL", _REQUIRED),
+    ("size", "size > 10", "value above maximum 10"),
+    ("size", "size < 0", "value below minimum 0"),
+    ("color", "color NOT IN ('red', 'blue')", _ENUM),
+    ("tags", "size(tags) != size(array_distinct(tags))", _UNIQUE),
+]
+
+
+def _union_form(df, id_col):
+    """The reference: one filtered select per check, unioned."""
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            df.filter(F.expr(pred)).select(
+                id_col.alias("record_id"), F.lit(prop).alias("property"), F.lit(err).alias("error")
+            )
+            for prop, pred, err in PROBE_CHECKS
+        ],
+    )
+
+
+def _multiset(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_frame_violations_single_pass_matches_union_form(spark):
+    df = spark.createDataFrame(PROBE_ROWS, PROBE_SCHEMA)
+    got = frame_violations(df, "probe", PROBE_REG)
+    assert got.columns == ["record_id", "property", "error"]
+    expected = _multiset(_union_form(df, F.col("probe_id")))
+    assert _multiset(got) == expected
+    # every check fires, and the record with several violations gets one row each
+    assert {(p, e) for _, p, e in expected} == {(p, e) for p, _, e in PROBE_CHECKS}
+    assert sum(n for (rid, _, _), n in expected.items() if rid == "many") == 6
+    # one pass: a single Generate over the frame, no union
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan and plan.count("Generate") == 1
+
+
+def test_frame_violations_without_id_column(spark):
+    df = spark.createDataFrame(PROBE_ROWS, PROBE_SCHEMA).drop("probe_id")
+    got = frame_violations(df, "probe", PROBE_REG)
+    expected = _multiset(_union_form(df, F.lit(None).cast("string")))
+    assert _multiset(got) == expected and sum(expected.values()) == 17
+    assert all(r["record_id"] is None for r in got.collect())
+
+
+def test_frame_violations_without_checks_is_empty_typed_frame(spark):
+    df = spark.createDataFrame([("b1", "x")], "bare_id string, note string")
+    got = frame_violations(df, "bare", PROBE_REG)
+    assert got.collect() == []
+    assert got.schema.simpleString() == "struct<record_id:string,property:string,error:string>"

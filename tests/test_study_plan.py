@@ -149,3 +149,36 @@ def test_duplicate_id_checks_run_in_callers_job_group(spark, study_inputs):
         sc._jsc.clearJobGroup()
     assert len(tracker.getJobIdsForGroup(group)) >= len(frames)
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_run_study_to_document_reads_duplicates_off_sorted_records(spark, study_inputs, monkeypatch):
+    """run_study_to_document runs no eager duplicate-id job; D3 on the
+    sorted document records names the same node, id and count as
+    run_study's eager check."""
+    import c3dc_etl_spark.plans.study as study
+
+    labs = study_inputs["laboratory_test"]
+    one = labs.filter("id = '102'")
+    sources = {"laboratory_test": labs.unionByName(one).unionByName(one)}
+    with pytest.raises(ValueError) as eager:
+        run_study(spark, sources=sources, mappings=MAPPINGS, row_identity=("id",))
+    assert str(eager.value) == "duplicate laboratory_test id: '102' (x3)"
+
+    def no_eager_check(*args):
+        raise AssertionError("eager duplicate-id check ran")
+
+    monkeypatch.setattr(study, "_assert_unique_ids", no_eager_check)
+    with pytest.raises(ValueError) as sorted_check:
+        run_study_to_document(spark, sources=sources, mappings=MAPPINGS, row_identity=("id",))
+    assert str(sorted_check.value) == str(eager.value)
+    # registry order across nodes, as in the eager check
+    subjects = study_inputs["participant"]
+    both = {**sources, "participant": subjects.unionByName(subjects)}
+    with pytest.raises(ValueError, match=r"duplicate participant id: 'P001' \(x2\)"):
+        run_study_to_document(spark, sources=both, mappings=MAPPINGS, row_identity=("usi",))
+    # a clean study still assembles and validates without the eager check
+    doc = run_study_to_document(
+        spark, sources=study_inputs, mappings=MAPPINGS, uuid_seed="study1",
+        row_identity=("usi",), parent_links={"survival": ("participant", "usi")},
+    )
+    assert len(doc["laboratory_tests"]) == 4
