@@ -1,7 +1,11 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-settings are cluster-safe. Every knob here is a scale decision:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; unset, that is the
+host's core count (``os.cpu_count()``, or 8 where it is unknown), so the
+session's parallelism differs from host to host. No layout decision may
+read it: partition and file counts come from data volume or a fixed
+constant (``sizing.py``, ``TableLog.LANDING_FILES``). The same settings
+are cluster-safe. Every knob here is a scale decision:
 
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting means
   one static ``spark.sql.shuffle.partitions`` works from sf0.001 to 100 TB.

@@ -89,6 +89,8 @@ class TableLog:
     ``table_dir/_log`` the commit manifests)."""
 
     MAX_COMMIT_RETRIES = 50
+    # Files one stats-partitioned landing writes (``_land_files``).
+    LANDING_FILES = 8
 
     def __init__(
         self,
@@ -608,7 +610,17 @@ class TableLog:
         per-file [min, max] envelopes are tight and disjoint — the
         layout that makes manifest-level file skipping bite.
         ``preserve_layout=True`` keeps the caller's partitioning/sort
-        (e.g. a Z-order rewrite) instead of re-range-partitioning."""
+        (e.g. a Z-order rewrite) instead of re-range-partitioning.
+
+        The range-partitioned landing writes ``LANDING_FILES`` (8) files,
+        the same default as ``optimize_zorder(target_files=8)``. The count
+        does not follow the session's core count: below 8 cores a
+        ``defaultParallelism // 4`` count lands ONE file, so no file can
+        be skipped and every merge or delete rewrites the whole table,
+        and the same data would land a different layout on every host.
+        Growing the count with data volume (``sizing.sized_partitions``)
+        is not done: no test or benchmark workload lands a table of more
+        than 8 files' worth."""
         staging = os.path.join(self.table_dir, f".staging-{uuid.uuid4().hex}")
         if (
             not preserve_layout
@@ -618,8 +630,7 @@ class TableLog:
             from pyspark.sql import functions as F
 
             df = df.repartitionByRange(
-                max(1, df.sparkSession.sparkContext.defaultParallelism // 4),
-                F.col(self.stats_col),
+                self.LANDING_FILES, F.col(self.stats_col)
             )
         df.write.mode("overwrite").parquet(staging)
         prefix = uuid.uuid4().hex

@@ -22,11 +22,13 @@ local run. Exit is nonzero if any audited query's headroom < 1024.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def value_hash(rows: list[tuple], columns: list[str]) -> str:

@@ -13,9 +13,11 @@ Usage: python scripts/gen_plan_budget.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -42,7 +44,7 @@ def main() -> int:
         # counts ride along for the audit but drift with filter phrasing,
         # so they are informational (not compared by the test)
         budget[name] = m
-    out = "/root/repo/tests/plan_budget.json"
+    out = os.path.join(REPO, "tests", "plan_budget.json")
     with open(out, "w") as fh:
         json.dump(budget, fh, indent=1, sort_keys=True)
         fh.write("\n")

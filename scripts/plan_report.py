@@ -10,10 +10,12 @@ Usage: python scripts/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def plan_metrics(p: str) -> dict:
@@ -301,7 +303,7 @@ def main() -> int:
         f"**{tot} queries audited; {flagged} red flags.**",
         "",
     ]
-    with open("/root/repo/PLAN_AUDIT.md", "w") as fh:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote PLAN_AUDIT.md: {tot} queries, {flagged} flags")
     return 0

@@ -148,7 +148,9 @@ def query_hashes() -> dict[str, str]:
     """Per-query content hash: the transitive package-import closure
     of the query function's defining module, plus the oracle SQL. A
     hash change means the driver's last green row no longer certifies
-    the code as it sits."""
+    the code as it sits. Oracles that read committed fixtures embed
+    their absolute path; it is hashed relative to the checkout, so the
+    same commit gives the same hashes wherever it is checked out."""
     from c3dc_etl_spark.suite import REGISTRY
 
     out: dict[str, str] = {}
@@ -160,7 +162,7 @@ def query_hashes() -> dict[str, str]:
             h.update(b"\0")
             h.update(_file_digest(path).encode())
             h.update(b"\0")
-        h.update((spec.oracle or "").encode())
+        h.update((spec.oracle or "").replace(REPO, "<repo>").encode())
         out[name] = h.hexdigest()[:16]
     return out
 
