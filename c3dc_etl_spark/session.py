@@ -2,10 +2,12 @@
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; unset, that is the
 host's core count (``os.cpu_count()``, or 8 where it is unknown), so the
-session's parallelism differs from host to host. No layout decision may
-read it: partition and file counts come from data volume or a fixed
-constant (``sizing.py``, ``TableLog.LANDING_FILES``). The same settings
-are cluster-safe. Every knob here is a scale decision:
+session's parallelism differs from host to host. Task counts may follow
+it (``spark.sql.shuffle.partitions`` below, ``operators.dedup.spread``,
+``operators.sampling``); what a write leaves on disk may not: the files
+a table-log landing writes are counted from data volume
+(``TableLog._land_files``). The same settings are cluster-safe. Every
+knob here is a scale decision:
 
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting means
   one static ``spark.sql.shuffle.partitions`` works from sf0.001 to 100 TB.

@@ -67,6 +67,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from c3dc_etl_spark.sizing import plan_input_bytes, sized_partitions
+
 
 class CommitConflict(RuntimeError):
     """A concurrent commit removed files this transaction also removes
@@ -89,8 +91,10 @@ class TableLog:
     ``table_dir/_log`` the commit manifests)."""
 
     MAX_COMMIT_RETRIES = 50
-    # Files one stats-partitioned landing writes (``_land_files``).
+    # Stats-partitioned landings (``_land_files``): at least this many
+    # files, each at most about LANDING_FILE_BYTES of input.
     LANDING_FILES = 8
+    LANDING_FILE_BYTES = 128 << 20
 
     def __init__(
         self,
@@ -612,15 +616,19 @@ class TableLog:
         ``preserve_layout=True`` keeps the caller's partitioning/sort
         (e.g. a Z-order rewrite) instead of re-range-partitioning.
 
-        The range-partitioned landing writes ``LANDING_FILES`` (8) files,
-        the same default as ``optimize_zorder(target_files=8)``. The count
-        does not follow the session's core count: below 8 cores a
-        ``defaultParallelism // 4`` count lands ONE file, so no file can
-        be skipped and every merge or delete rewrites the whole table,
-        and the same data would land a different layout on every host.
-        Growing the count with data volume (``sizing.sized_partitions``)
-        is not done: no test or benchmark workload lands a table of more
-        than 8 files' worth."""
+        The range-partitioned file count comes from data volume: one
+        file per ``LANDING_FILE_BYTES`` (128 MiB, the session's
+        ``spark.sql.files.maxPartitionBytes``, so a landed file is one
+        scan split) of the bytes ``df`` reads
+        (``sizing.plan_input_bytes``), rounded up to a power of two and
+        at least ``LANDING_FILES`` (8, also ``optimize_zorder``'s
+        default), so that a narrow merge or delete rewrites a file's
+        share of the table, not a fixed fraction of it. A frame whose
+        input has no size estimate lands the minimum. The count does
+        not follow the session's core count: a core-derived count lands
+        one file on a small host, where no file can be skipped and every
+        merge or delete rewrites the whole table, and it lands the same
+        data in a different layout on every host."""
         staging = os.path.join(self.table_dir, f".staging-{uuid.uuid4().hex}")
         if (
             not preserve_layout
@@ -629,9 +637,12 @@ class TableLog:
         ):
             from pyspark.sql import functions as F
 
-            df = df.repartitionByRange(
-                self.LANDING_FILES, F.col(self.stats_col)
+            files = sized_partitions(
+                plan_input_bytes(df) or 0,
+                self.LANDING_FILE_BYTES,
+                min_partitions=self.LANDING_FILES,
             )
+            df = df.repartitionByRange(files, F.col(self.stats_col))
         df.write.mode("overwrite").parquet(staging)
         prefix = uuid.uuid4().hex
         names = []
@@ -1224,7 +1235,7 @@ class TableLog:
         y_col: str,
         *,
         bits: int = 8,
-        target_files: int = 8,
+        target_files: int = LANDING_FILES,
     ) -> int:
         """OPTIMIZE ZORDER BY (x_col, y_col): rewrite the current
         snapshot clustered by the Morton interleave of both columns —

@@ -1,10 +1,11 @@
-"""Volume-based partition sizing — the one derivation behind both
-streaming state partitions (streaming/sizing.py) and iterative-loop
-reducers (operators/iterscope.py): enough partitions that each carries
-at most a per-partition byte budget, rounded up to a power of two
-(keeps modulo hash distribution even and successive resizes
-comparable), clamped. Partition counts derive from DATA VOLUME, never
-from a core count — the discipline both call sites document. Broadcast
+"""Volume-based partition sizing — the one derivation behind streaming
+state partitions (streaming/sizing.py), iterative-loop reducers
+(operators/iterscope.py) and table-log landing files
+(sink/tablelog.py): enough partitions that each carries at most a
+per-partition byte budget, rounded up to a power of two (keeps modulo
+hash distribution even and successive resizes comparable), clamped.
+Partition counts derive from DATA VOLUME, never from a core count — the
+discipline every call site documents. Broadcast
 gates compare a worst-case byte estimate against one driver-memory
 budget (``broadcast_budget_bytes``).
 """
@@ -18,6 +19,7 @@ __all__ = [
     "broadcast_budget_bytes",
     "parquet_column_range",
     "parquet_row_count",
+    "plan_input_bytes",
     "sized_partitions",
 ]
 
@@ -43,6 +45,29 @@ def sized_partitions(
     if max_partitions is not None:
         parts = min(parts, max_partitions)
     return parts
+
+
+def plan_input_bytes(df) -> int | None:
+    """Bytes ``df`` reads: the sum of the optimizer's size estimates of
+    its plan's leaf relations (a file scan reports its files' on-disk
+    bytes, a local relation its rows times their width). Driver-side,
+    no Spark job. ``None`` when a leaf has no estimate: Spark gives an
+    RDD-backed relation the ``spark.sql.defaultSizeInBytes``
+    placeholder. The leaves are summed rather than the root read
+    because a join's root estimate is the PRODUCT of its sides; what
+    filters, projections, anti-joins, unions and aggregates produce is
+    bounded by their input, while an explode or a cross join can
+    produce more."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    unknown = conf.defaultSizeInBytes()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        size = int(leaves.apply(i).stats().sizeInBytes())
+        if size >= unknown:
+            return None
+        total += size
+    return total
 
 
 _MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}

@@ -176,7 +176,7 @@ def table_log_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log = TableLog(_scratch("tablelog_zorder_"))
     log.append(li)
-    log.optimize_zorder(spark, "l_partkey", "l_suppkey", target_files=8)
+    log.optimize_zorder(spark, "l_partkey", "l_suppkey")
     return log.read(spark).filter(
         F.col("l_partkey").between(20, 60) & F.col("l_suppkey").between(2, 6)
     )
@@ -254,7 +254,7 @@ def table_log_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra_stats_cols=["l_partkey", "l_suppkey"],
     )
     log.append(li)
-    log.optimize_zorder(spark, "l_partkey", "l_suppkey", target_files=8)
+    log.optimize_zorder(spark, "l_partkey", "l_suppkey")
     return log.read(
         spark, col_between={"l_partkey": (20, 60), "l_suppkey": (2, 6)}
     )

@@ -21,12 +21,6 @@ Usage (repo root):
   python3 scripts/bench_fence.py --baseline         # (re)write BENCH_FENCE.json
   python3 scripts/bench_fence.py path/to/DETAIL.json
 
-``--baseline`` also copies the detail it rebased from to
-``tests/fixtures/bench_detail_r12.json``, the committed artifact that
-tests/test_bench_fence.py checks the fence against. bench.py overwrites
-BENCH_DETAIL.json on every run, so the tests never read it; the fence
-and its fixture are written together and cannot drift apart.
-
 Exit status: 0 = no regression, 1 = offenders listed on stdout.
 ``--baseline`` is run when a round's bench is ACCEPTED as the new
 comparison base (the r11 artifact was accepted by the r11 verdict);
@@ -42,7 +36,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FENCE = os.path.join(REPO, "BENCH_FENCE.json")
-BASE_DETAIL = os.path.join(REPO, "tests", "fixtures", "bench_detail_r12.json")
 
 RATIO = 1.25
 SLACK_S = 0.15
@@ -101,19 +94,13 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--baseline"]
     detail_path = args[0] if args else os.path.join(REPO, "BENCH_DETAIL.json")
     with open(detail_path) as fh:
-        raw = fh.read()
-    detail = json.loads(raw)
+        detail = json.load(fh)
     if "--baseline" in sys.argv[1:]:
         walls = normalized_walls(detail)
         with open(FENCE, "w") as fh:
             json.dump(walls, fh, indent=1, sort_keys=True)
             fh.write("\n")
-        with open(BASE_DETAIL, "w") as fh:
-            fh.write(raw)
-        print(
-            f"wrote {len(walls)} committed normalized walls -> {FENCE}, "
-            f"base detail -> {BASE_DETAIL}"
-        )
+        print(f"wrote {len(walls)} committed normalized walls -> {FENCE}")
         return 0
     if not os.path.exists(FENCE):
         print("no BENCH_FENCE.json committed; run --baseline first")

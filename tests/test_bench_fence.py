@@ -1,14 +1,7 @@
 """The PLANS.md normalized-wall comparison rule as code (VERDICT r11
 ask #4): green on the committed comparison base, red on a synthetic
 1.5x perturbation — so round-over-round adjudication is a diff, not an
-essay.
-
-The detail checked is the committed fixture
-``tests/fixtures/bench_detail_r12.json`` (``bench_fence.BASE_DETAIL``),
-the round-12 artifact that BENCH_FENCE.json's ``_adjudicated`` entries
-were reviewed against; ``bench_fence.py --baseline`` rewrites it with
-the fence. The live BENCH_DETAIL.json is overwritten by every bench run,
-so its fence check is bench.py's stderr report, not a test."""
+essay."""
 
 import json
 import os
@@ -21,7 +14,7 @@ import bench_fence  # noqa: E402
 
 
 def _load():
-    with open(bench_fence.BASE_DETAIL) as fh:
+    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as fh:
         detail = json.load(fh)
     with open(bench_fence.FENCE) as fh:
         fence = json.load(fh)

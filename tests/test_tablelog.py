@@ -188,6 +188,53 @@ def test_checkpoint_replay_matches_full_replay(spark, tmp_path):
     assert opened < total
 
 
+def test_plan_input_bytes_sums_leaf_relations(spark):
+    from c3dc_etl_spark.sizing import plan_input_bytes
+
+    path = os.path.join(SF, "orders.parquet")
+    scan = spark.read.parquet(path)
+    assert plan_input_bytes(scan) == os.path.getsize(path)
+    # a self-join reads its input twice; the root estimate would be the
+    # product of the two sides
+    keys = scan.select("o_orderkey")
+    assert plan_input_bytes(scan.join(keys, "o_orderkey")) == 2 * os.path.getsize(
+        path
+    )
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,)]), "k long"
+    )
+    assert plan_input_bytes(rdd_backed) is None
+
+
+def test_landing_file_count_follows_input_volume(spark, tmp_path):
+    """A stats-partitioned landing writes one file per
+    LANDING_FILE_BYTES of input and never fewer than LANDING_FILES,
+    whatever the session's core count; the files keep disjoint key
+    envelopes."""
+    from c3dc_etl_spark.sizing import plan_input_bytes
+
+    orders = _orders(spark)
+    small = TableLog(str(tmp_path / "small"), stats_col="o_orderkey")
+    small.append(orders)
+    assert len(small.files()) == TableLog.LANDING_FILES
+
+    big = TableLog(str(tmp_path / "big"), stats_col="o_orderkey")
+    big.LANDING_FILE_BYTES = plan_input_bytes(orders) // 30
+    big.append(orders)
+    snap = big.snapshot()
+    # 30-odd target-sized files, rounded up to a power of two
+    assert len(snap) == 32
+    envs = sorted((st["min"], st["max"]) for st in snap.values())
+    assert all(a[1] < b[0] for a, b in zip(envs, envs[1:]))
+    assert _rows(big.read(spark)) == _rows(orders)
+
+    # no size estimate (an RDD-backed frame): the minimum count
+    rdd_backed = spark.createDataFrame(orders.rdd, orders.schema)
+    unsized = TableLog(str(tmp_path / "unsized"), stats_col="o_orderkey")
+    unsized.append(rdd_backed)
+    assert len(unsized.files()) == TableLog.LANDING_FILES
+
+
 def test_concurrent_appends_all_win_distinct_versions(spark, tmp_path):
     """A REAL commit race: 8 threads append through the same log
     concurrently; the hard-link CAS must serialize them into 8 distinct
