@@ -50,6 +50,19 @@ def blankish(col: Column | str) -> Column:
     return nullif_blank(col).isNull()
 
 
+def missing_required(col: Column | str, prop_type: str) -> Column:
+    """True when a required value of schema type ``prop_type`` is
+    missing (P6): NULL always; a blank string; an array that is empty or
+    holds only NULLs. Never NULL itself, so ``filter(~missing)`` and a
+    ``when(missing, ...)`` check agree on every row."""
+    c = _c(col)
+    if prop_type == "array":
+        return c.isNull() | (F.size(F.filter(c, lambda v: v.isNotNull())) == 0)
+    if prop_type == "string":
+        return blankish(c)
+    return c.isNull()
+
+
 def split_multi(col: Column | str, *, sort: bool = True, distinct: bool = True) -> Column:
     """';'-delimited multi-value cell -> normalized string array."""
     arr = F.transform(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from c3dc_etl_spark.functions.columns import (
     MULTIPLE_VALUE_DELIMITER,
-    blankish,
+    missing_required,
     split_multi,
 )
 from c3dc_etl_spark.mapping.compiler import CompilerContext, compile_node_groups
@@ -141,15 +141,8 @@ def build_node(
     )
 
     # P6: drop records missing any schema-required property
-    # ('', null, [] and all-null arrays all count as missing)
     for req in ctx.registry.required_props(node):
         if req not in df.columns or req in always_nonblank:
             continue
-        c = F.col(req)
-        if ctx.registry.prop(node, req).type == "array":
-            df = df.filter(c.isNotNull() & (F.size(F.filter(c, lambda v: v.isNotNull())) > 0))
-        elif ctx.registry.prop(node, req).type == "string":
-            df = df.filter(~blankish(c))
-        else:
-            df = df.filter(c.isNotNull())
+        df = df.filter(~missing_required(req, ctx.registry.prop(node, req).type))
     return df

@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from c3dc_etl_spark import sizing
 from c3dc_etl_spark.pinning import pin
 
 _WARNED_RDD_FALLBACK = False
@@ -938,7 +939,6 @@ def exact_substring_spans(
     id_col: str,
     *,
     min_len: int = 40,
-    broadcast_hash_rows: int = 4_000_000,
 ) -> DataFrame:
     """EXACT substring-level duplicate detection (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -963,19 +963,17 @@ def exact_substring_spans(
        the 8-byte xxhash64 per position (never the L-byte gram — at
        L=40 that would shuffle 40x the corpus) -> hash occurrence
        counts; keep hashes seen >= 2.
-    2. SIZE-ADAPTIVE position filter (VERDICT r11 #2: the old shape
-       carried grams into the hash join unconditionally — safe only
-       while AQE happened to broadcast the hash set). One bounded
-       count of the 8-byte duplicated-hash set decides the strategy
-       driver-side:
-       - FAST path (|dup_h| <= ``broadcast_hash_rows``; the 4M-row
-         default builds a ~150 MB long-keyed hash relation at
-         ~30-40 B/row — comfortably inside a real executor's memory
-         overhead, far above the 10 MB auto-threshold AQE would apply):
-         the gram stream joins an EXPLICITLY broadcast hash set — the
-         hint is honored regardless of AQE's estimates, so the join
-         can never flip to an exchange that would shuffle grams at
-         L x corpus volume.
+    2. SIZE-ADAPTIVE position filter (grams carried into the hash
+       join unconditionally are safe only while AQE happens to
+       broadcast the hash set). One bounded count of the 8-byte
+       duplicated-hash set decides the strategy driver-side:
+       - FAST path (the long-keyed hash relation, at ~40 B/row, fits
+         ``sizing.broadcast_budget_bytes`` — the share of the driver
+         heap a broadcast may take, far above the 10 MB auto-threshold
+         AQE would apply): the gram stream joins an EXPLICITLY
+         broadcast hash set — the hint is honored regardless of AQE's
+         estimates, so the join can never flip to an exchange that
+         would shuffle grams at L x corpus volume.
        - NARROW path (hash set too big to broadcast): join (id, p, h)
          rows — 24 bytes/position, NO gram column — against the hash
          set (a shuffle here moves 24 B/position, by design), then
@@ -1039,7 +1037,7 @@ def exact_substring_spans(
     # pass 2: size-adaptive (see docstring). ONE bounded count job on
     # the pinned 8-byte hash set makes the strategy decision explicit
     # and driver-side instead of leaving it to AQE size estimates.
-    if dup_h.count() <= int(broadcast_hash_rows):
+    if dup_h.count() * 40 <= sizing.broadcast_budget_bytes(df.sparkSession):
         # FAST: the hint is honored unconditionally, so the gram
         # stream can never cross an exchange on this path either
         cand = (

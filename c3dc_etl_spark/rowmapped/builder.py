@@ -25,7 +25,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.functions.columns import blankish, deterministic_uuid
+from c3dc_etl_spark.functions.columns import (
+    blankish,
+    deterministic_uuid,
+    missing_required,
+)
 from c3dc_etl_spark.mapping.compiler import (
     CompilerContext,
     match_predicate,
@@ -202,11 +206,5 @@ def build_rowmapped_node(
     for req in registry.required_props(node):
         if req not in out.columns:
             continue
-        c = F.col(req)
-        if registry.prop(node, req).type == "array":
-            out = out.filter(c.isNotNull() & (F.size(c) > 0))
-        elif registry.prop(node, req).type == "string":
-            out = out.filter(~blankish(c))
-        else:
-            out = out.filter(c.isNotNull())
+        out = out.filter(~missing_required(req, registry.prop(node, req).type))
     return out

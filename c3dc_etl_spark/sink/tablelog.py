@@ -5,7 +5,7 @@ core, pure stdlib (same vendoring move as ``sources/xlsx_lite.py``).
 
 Why the directory-swap sinks (``sink/publish.py``) aren't enough: a
 swap is correct for ONE writer and readers that tolerate a loud failure
-window. With a compactor (T93) and a partition backfill (T98) running
+window. With a compactor and a partition backfill running
 beside long queries at 100 TB, readers need a STABLE view while files
 are rewritten underneath them. The table-format answer, implemented
 here:
@@ -67,7 +67,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from c3dc_etl_spark.sizing import plan_input_bytes, sized_partitions
+from c3dc_etl_spark.sizing import (
+    broadcast_budget_bytes,
+    plan_input_bytes,
+    sized_partitions,
+)
 
 
 class CommitConflict(RuntimeError):
@@ -154,35 +158,55 @@ class TableLog:
                 out.append(int(name[: -len(".checkpoint.json")]))
         return sorted(out)
 
-    def snapshot(self, version: int | None = None) -> dict[str, dict]:
-        """Replay the log up to ``version`` (latest if None): the
-        snapshot's live files mapped to their stats (possibly empty
-        dicts), in first-added order. Replay starts from the newest
-        checkpoint manifest at-or-below ``version`` when one exists."""
-        head = self.latest_version() if version is None else version
-        if head is None:
-            return {}
-        live: dict[str, dict] = {}
-        start = 0
-        cps = [c for c in self._checkpoint_versions() if c <= head]
-        if cps:
-            cp = cps[-1]
+    def _checkpoint_for(self, head: int, key: str) -> tuple[dict, int]:
+        """(payload, first manifest to replay) of the newest checkpoint
+        at-or-below ``head`` that carries ``key``, or ({}, 0) when none
+        does: an older checkpoint that predates a fold must not truncate
+        the replay."""
+        for cp in reversed(
+            [c for c in self._checkpoint_versions() if c <= head]
+        ):
             path = os.path.join(self.log_dir, f"{cp:020d}.checkpoint.json")
             with open(path) as fh:
                 ck = json.load(fh)
-            live = {name: ck.get("stats", {}).get(name, {}) for name in ck["files"]}
-            start = cp + 1
+            if key in ck:
+                return ck, cp + 1
+        return {}, 0
+
+    def _replay(self, version: int | None, key: str, from_ck, apply) -> dict:
+        """The one checkpoint-tail replay behind every log view
+        (snapshot, txns, constraints, the dv maps): start from
+        ``from_ck(payload)`` of the newest ``key``-bearing checkpoint
+        at-or-below ``version`` (latest if None), then ``apply(state,
+        manifest)`` for each manifest of the tail — O(tail), not
+        O(all commits)."""
+        head = self.latest_version() if version is None else version
+        if head is None:
+            return {}
+        ck, start = self._checkpoint_for(head, key)
+        state = from_ck(ck) if ck else {}
         for v in self.versions():
-            if v < start:
-                continue
-            if v > head:
-                break
-            m = self._manifest(v)
+            if start <= v <= head:
+                apply(state, self._manifest(v))
+        return state
+
+    def snapshot(self, version: int | None = None) -> dict[str, dict]:
+        """Replay the log up to ``version`` (latest if None): the
+        snapshot's live files mapped to their stats (possibly empty
+        dicts), in first-added order."""
+
+        def _apply(live: dict, m: dict) -> None:
             for name in m.get("remove", ()):
                 live.pop(name, None)
             for name in m.get("add", ()):
                 live[name] = m.get("stats", {}).get(name, {})
-        return live
+
+        return self._replay(
+            version,
+            "files",
+            lambda ck: {n: ck.get("stats", {}).get(n, {}) for n in ck["files"]},
+            _apply,
+        )
 
     def files(self, version: int | None = None) -> list[str]:
         """The snapshot's live data-file names, in first-added order."""
@@ -194,28 +218,13 @@ class TableLog:
         exactly-once dedup state for idempotent streaming sinks
         (Delta's ``txn`` action). Folded into checkpoints, so resolution
         is O(tail) like snapshot()."""
-        head = self.latest_version() if version is None else version
-        if head is None:
-            return {}
-        marks: dict[str, int] = {}
-        start = 0
-        cps = [c for c in self._checkpoint_versions() if c <= head]
-        if cps:
-            cp = cps[-1]
-            with open(
-                os.path.join(self.log_dir, f"{cp:020d}.checkpoint.json")
-            ) as fh:
-                marks = dict(json.load(fh).get("txns", {}))
-            start = cp + 1
-        for v in self.versions():
-            if v < start:
-                continue
-            if v > head:
-                break
-            t = self._manifest(v).get("txn")
+
+        def _apply(marks: dict, m: dict) -> None:
+            t = m.get("txn")
             if t:
                 marks[t["app"]] = max(marks.get(t["app"], -1), t["batch"])
-        return marks
+
+        return self._replay(version, "txns", lambda ck: dict(ck["txns"]), _apply)
 
     def last_txn(self, app: str) -> int | None:
         """Highest batch id this app has committed, or None."""
@@ -242,53 +251,31 @@ class TableLog:
         return self._dv_replay(version, "dvs", dict, _apply)
 
     def _dv_replay(self, version, ck_key: str, from_ck, apply_entry) -> dict:
-        """Shared checkpoint-tail replay for the dv-layer maps
-        (:meth:`dv_map`, :meth:`dv_row_counts`) — ONE skeleton owns
-        the backwards search for a ``ck_key``-bearing checkpoint (an
-        older checkpoint predating the folding must not truncate the
-        replay — the constraints() precedent) and the add/remove pop
+        """:meth:`_replay` for the dv-layer maps (:meth:`dv_map`,
+        :meth:`dv_row_counts`): one skeleton owns the add/remove pop
         rules, so the maps that must mirror each other mirror each
-        other STRUCTURALLY (round-12 review #6). ``from_ck`` builds
-        the initial state from the checkpoint payload; ``apply_entry``
-        applies one manifest's dv-layer actions after the pops."""
-        head = self.latest_version() if version is None else version
-        if head is None:
-            return {}
-        state: dict = {}
-        start = 0
-        for cp in reversed(
-            [c for c in self._checkpoint_versions() if c <= head]
-        ):
-            with open(
-                os.path.join(self.log_dir, f"{cp:020d}.checkpoint.json")
-            ) as fh:
-                ck = json.load(fh)
-            if ck_key in ck:
-                state = from_ck(ck[ck_key])
-                start = cp + 1
-                break
-        for v in self.versions():
-            if v < start:
-                continue
-            if v > head:
-                break
-            m = self._manifest(v)
-            for f in m.get("remove", ()):
-                state.pop(f, None)
-            for f in m.get("add", ()):
+        other STRUCTURALLY. ``from_ck`` builds the initial state from
+        the checkpoint's ``ck_key`` payload; ``apply_entry`` applies one
+        manifest's dv-layer actions after the pops."""
+
+        def _apply(state: dict, m: dict) -> None:
+            for f in (*m.get("remove", ()), *m.get("add", ())):
                 state.pop(f, None)
             apply_entry(state, m)
-        return state
+
+        return self._replay(
+            version, ck_key, lambda ck: from_ck(ck[ck_key]), _apply
+        )
 
     def _dv_map_checked(self, base: int | None) -> dict[str, str]:
         """:meth:`dv_map` with the resolution-gap case REFUSED: a base
         view that cannot be resolved without gaps (manifests cleaned
         below a checkpoint that does not carry the dv fold) must not
         silently under-resolve — a rewrite or merge-on-read predicate
-        built on it would resurrect deleted rows (round-12 review #1:
-        the commit-time check only covered the RACING case; the
-        base-capture case needs the same guard, and failing at capture
-        is cheaper than after the read)."""
+        built on it would resurrect deleted rows. The commit-time check
+        covers only the RACING case; the base capture needs the same
+        guard, and failing at capture is cheaper than after the
+        read."""
         if base is None:
             base = self.latest_version()
         if base is not None and not self._view_complete(base, "dvs"):
@@ -302,8 +289,8 @@ class TableLog:
     def dv_row_counts(self, version: int | None = None) -> dict[str, int]:
         """data-file name -> TOTAL rows in its active deletion vector,
         for files whose vector-setting commit recorded a ``dv_rows``
-        map (every DV write path does since round 12; restore/clone
-        propagate what they know). Replay rules mirror :meth:`dv_map`
+        map (every DV write path does; restore/clone propagate what
+        they know). Replay rules mirror :meth:`dv_map`
         exactly and the map folds into checkpoints the same way — so
         the smallness bound every DV commit enforces is DRIVER
         arithmetic over this map, not a re-read of every sidecar per
@@ -421,7 +408,7 @@ class TableLog:
                 "files": list(snap),
                 "stats": {k: v for k, v in snap.items() if v},
                 "txns": self.txns(head),
-                # live constraint map folded in (ADVICE r6 #4) so
+                # live constraint map folded in so
                 # constraints() resolves O(tail) like snapshot()/txns()
                 # instead of replaying every manifest from version 0 on
                 # EVERY write-path enforcement
@@ -546,7 +533,7 @@ class TableLog:
                     and head is not None
                     and head > constraints_epoch
                 ):
-                    # metadata-conflict detection (ADVICE r6 #3): a CHECK
+                    # metadata-conflict detection: a CHECK
                     # constraint added by a concurrent writer AFTER this
                     # batch's enforcement pass means the batch was never
                     # validated against it — surface the conflict instead
@@ -555,11 +542,11 @@ class TableLog:
                     # additions/tightenings conflict). Detected by
                     # DIFFING the checkpoint-aware constraint maps at
                     # epoch vs head, not by replaying raw manifests in
-                    # (epoch, head] (ADVICE r7: manifest cleanup below a
-                    # checkpoint — a pattern the checkpoint-tail test
-                    # sanctions — would make a deleted constraint-add
-                    # manifest invisible to the raw scan, silently
-                    # landing an unvalidated batch).
+                    # (epoch, head]: manifest cleanup below a checkpoint
+                    # — a pattern the checkpoint-tail test sanctions —
+                    # would make a deleted constraint-add manifest
+                    # invisible to the raw scan, silently landing an
+                    # unvalidated batch.
                     if not (
                         self._constraints_view_complete(constraints_epoch)
                         and self._constraints_view_complete(head)
@@ -830,11 +817,8 @@ class TableLog:
         — the manifest-level I/O measurement (pruned_file_count's
         point-predicate sibling)."""
         snap = self.snapshot(version)
-        pos = self._bloom_positions(spark, value)
-        opened = sum(
-            1 for st in snap.values() if self._bloom_hits(st, pos)
-        )
-        return opened, len(snap)
+        probe = self._bloom_positions(spark, value)
+        return len(self._select_files(snap, probe=probe)), len(snap)
 
     @staticmethod
     def _bloom_hits(st: dict, positions: list[int]) -> bool:
@@ -881,34 +865,18 @@ class TableLog:
         predate the folding and fall back to full replay), then replays
         only the manifest tail — O(tail), matching snapshot()/txns();
         this runs on EVERY write-path enforcement, so it must not grow
-        with total commit count (ADVICE r6 #4)."""
-        head = self.latest_version() if version is None else version
-        out: dict[str, str] = {}
-        if head is None:
-            return out
-        start = 0
-        for cp in reversed([c for c in self._checkpoint_versions() if c <= head]):
-            path = os.path.join(self.log_dir, f"{cp:020d}.checkpoint.json")
-            with open(path) as fh:
-                ck = json.load(fh)
-            if "constraints" in ck:
-                out = dict(ck["constraints"])
-                start = cp + 1
-                break
-        for v in self.versions():
-            if v < start:
-                continue
-            if v > head:
-                break
-            m = self._manifest(v)
+        with total commit count."""
+
+        def _apply(out: dict, m: dict) -> None:
             c = m.get("constraint")
-            if not c:
-                continue
-            if c.get("check") is None:
+            if c and c.get("check") is None:
                 out.pop(c["name"], None)
-            else:
+            elif c:
                 out[c["name"]] = c["check"]
-        return out
+
+        return self._replay(
+            version, "constraints", lambda ck: dict(ck["constraints"]), _apply
+        )
 
     def _view_complete(self, x: int, key: str) -> bool:
         """True when the ``key``-keyed log view at ``x`` resolves
@@ -919,16 +887,8 @@ class TableLog:
         replay that silently skips missing manifests is not — every
         commit-time conflict diff must refuse rather than trust a
         partial view."""
+        _, start = self._checkpoint_for(x, key)
         have = set(self.versions())
-        start = 0
-        for cp in reversed(
-            [c for c in self._checkpoint_versions() if c <= x]
-        ):
-            path = os.path.join(self.log_dir, f"{cp:020d}.checkpoint.json")
-            with open(path) as fh:
-                if key in json.load(fh):
-                    start = cp + 1
-                    break
         return all(v in have for v in range(start, x + 1))
 
     def _constraints_view_complete(self, x: int) -> bool:
@@ -949,7 +909,7 @@ class TableLog:
         Returns the log version the constraint map was read at; write
         paths hand it to :meth:`commit` as ``constraints_epoch`` so the
         CAS retry loop detects a CHECK added by a concurrent writer
-        AFTER this enforcement (ADVICE r6 #3) — without it a violating
+        AFTER this enforcement — without it a violating
         batch could land against a constraint it was never checked
         against."""
         head = self.latest_version()
@@ -1189,44 +1149,59 @@ class TableLog:
             extra=extra,
         )
 
-    def compact(self, spark: SparkSession, *, target_partitions: int = 1) -> int:
-        """Rewrite the current snapshot into ``target_partitions`` files
-        (T93's small-file compaction as a TRANSACTION): readers holding
-        any prior snapshot keep bit-identical results because the old
-        files stay on disk until vacuum."""
-        # resolve ONE snapshot and feed the same explicit file list to
-        # both the rewrite read and the remove list — re-resolving at
-        # read time would silently duplicate the rows of any file a
-        # racer commits between the two resolutions
+    def _rewrite_snapshot(self, spark: SparkSession, op: str, layout) -> int:
+        """The DV-aware whole-snapshot rewrite behind ``compact`` and
+        ``optimize_zorder``: read ONE resolved snapshot with its deletion
+        vectors applied, land ``layout(rows)`` as laid out, and commit it
+        in place of exactly that file list. Re-resolving the snapshot at
+        commit time would duplicate the rows of any file a racer commits
+        in between. Deleted rows cannot resurrect, and the rewritten
+        files' vectors retire with them (the rewrite doubles as a purge).
+        Appends commute with the rewrite; a racer's deletion vector on a
+        rewritten file changes content this rewrite already read without
+        touching the file set the liveness check guards, so it
+        conflicts."""
         base = self.latest_version()
         current = self.files(base)
         if not current:
             raise ValueError(f"table {self.table_dir} has no committed data")
-        # DV-aware rewrite: deleted rows must not resurrect through the
-        # compaction, and since the DV'd files are in the remove list,
-        # their vectors retire with them (a compact doubles as a purge)
         base_dvm = self._dv_map_checked(base)
-        df = self._scan_files(spark, current, dvm=base_dvm)
 
         def _validate(head):
-            # a racer's deletion vector changes the content this rewrite
-            # already read without touching the file set the liveness
-            # check guards — refuse rather than resurrect its deletes
             dvc = self._dv_changes_since(base_dvm, head, touched=current)
             if dvc:
                 raise CommitConflict(
                     f"concurrent deletion vectors landed on {dvc} "
-                    "during the compaction read; re-run the compact"
+                    f"during the {op} rewrite; re-run the {op}"
                 )
 
-        compacted = self._land_files(df.repartition(target_partitions))
+        df = self._scan_files(spark, current, dvm=base_dvm)
+        adds = self._land_files(layout(df), preserve_layout=True)
         return self.commit(
-            add=compacted,
+            add=adds,
             remove=current,
-            op="compact",
-            stats=self._file_stats(spark, compacted),
+            op=op,
+            stats=self._file_stats(spark, adds),
             validate=_validate,
         )
+
+    def compact(self, spark: SparkSession, *, target_partitions: int = 1) -> int:
+        """Rewrite the current snapshot into ``target_partitions`` files
+        (small-file compaction as a TRANSACTION): readers holding any
+        prior snapshot keep bit-identical results because the old files
+        stay on disk until vacuum. With a ``stats_col`` the rows are
+        range-partitioned on it, so the files keep tight, disjoint
+        envelopes for file skipping."""
+        from pyspark.sql import functions as F
+
+        def layout(df: DataFrame) -> DataFrame:
+            if self.stats_col in df.columns:
+                return df.repartitionByRange(
+                    target_partitions, F.col(self.stats_col)
+                )
+            return df.repartition(target_partitions)
+
+        return self._rewrite_snapshot(spark, "compact", layout)
 
     def optimize_zorder(
         self,
@@ -1252,64 +1227,41 @@ class TableLog:
         compact Z-range whose min/max envelope bounds BOTH dimensions —
         a 2-D box predicate then skips most files, where a
         single-column sort only prunes its leading key (file-count gap
-        asserted in tests/test_tablelog). ``preserve_layout`` landing
-        keeps the Z clustering instead of re-partitioning by stats_col;
-        manifest stats are still recorded per landed file."""
+        asserted in tests/test_tablelog). The landing keeps the Z
+        clustering instead of re-partitioning by stats_col; manifest
+        stats are still recorded per landed file."""
         from pyspark.sql import functions as F
 
         from c3dc_etl_spark.operators.warehouse import morton_key
 
-        base = self.latest_version()
-        current = self.files(base)
-        if not current:
-            raise ValueError(f"table {self.table_dir} has no committed data")
-        # DV-aware like compact: the layout rewrite must not resurrect
-        # merge-on-read deletes, and retires the rewritten files' vectors
-        base_dvm = self._dv_map_checked(base)
-        df = self._scan_files(spark, current, dvm=base_dvm)
-        width = 1 << bits
-        bounds = df.agg(
-            F.min(F.col(x_col)).alias("nx"),
-            F.max(F.col(x_col)).alias("mx"),
-            F.min(F.col(y_col)).alias("ny"),
-            F.max(F.col(y_col)).alias("my"),
-        ).first()
-        if bounds["mx"] is None or bounds["my"] is None:
-            raise ValueError("optimize_zorder: z-order columns are all-NULL")
-        if bounds["nx"] < 0 or bounds["ny"] < 0:
-            # Morton interleave is defined over non-negative bucket ids;
-            # a negative value would shift garbage into the key
-            raise ValueError(
-                "optimize_zorder requires non-negative z-order columns "
-                "(offset/clamp negatives upstream)"
-            )
-        mx, my = int(bounds["mx"]), int(bounds["my"])
-        xb = F.floor(F.col(x_col) * float(width) / (mx + 1)).cast("bigint")
-        yb = F.floor(F.col(y_col) * float(width) / (my + 1)).cast("bigint")
-        z = morton_key(xb, yb, bits=bits)
-        clustered = (
-            df.withColumn("__z", z)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-
-        def _validate(head):
-            dvc = self._dv_changes_since(base_dvm, head, touched=current)
-            if dvc:
-                raise CommitConflict(
-                    f"concurrent deletion vectors landed on {dvc} "
-                    "during the zorder rewrite; re-run the optimize"
+        def layout(df: DataFrame) -> DataFrame:
+            bounds = df.agg(
+                F.min(F.col(x_col)).alias("nx"),
+                F.max(F.col(x_col)).alias("mx"),
+                F.min(F.col(y_col)).alias("ny"),
+                F.max(F.col(y_col)).alias("my"),
+            ).first()
+            if bounds["mx"] is None or bounds["my"] is None:
+                raise ValueError("optimize_zorder: z-order columns are all-NULL")
+            if bounds["nx"] < 0 or bounds["ny"] < 0:
+                # Morton interleave is defined over non-negative bucket
+                # ids; a negative value would shift garbage into the key
+                raise ValueError(
+                    "optimize_zorder requires non-negative z-order columns "
+                    "(offset/clamp negatives upstream)"
                 )
+            width = 1 << bits
+            mx, my = int(bounds["mx"]), int(bounds["my"])
+            xb = F.floor(F.col(x_col) * float(width) / (mx + 1)).cast("bigint")
+            yb = F.floor(F.col(y_col) * float(width) / (my + 1)).cast("bigint")
+            return (
+                df.withColumn("__z", morton_key(xb, yb, bits=bits))
+                .repartitionByRange(target_files, F.col("__z"))
+                .sortWithinPartitions("__z")
+                .drop("__z")
+            )
 
-        rewritten = self._land_files(clustered, preserve_layout=True)
-        return self.commit(
-            add=rewritten,
-            remove=current,
-            op="optimize_zorder",
-            stats=self._file_stats(spark, rewritten),
-            validate=_validate,
-        )
+        return self._rewrite_snapshot(spark, "optimize_zorder", layout)
 
     def _key_env(self, st: dict):
         """[min, max] envelope of the CURRENT ``stats_col``, or None when
@@ -1331,10 +1283,9 @@ class TableLog:
         conflict surface for predicate-level checks (merge key overlap,
         delete/replace range overlap). Resolved from the
         checkpoint-aware ``snapshot(head)`` instead of a raw manifest
-        scan of (base, head] (the same blindness class ADVICE r11 #1
-        named for the dv arms: a checkpoint+cleanup landing during a
+        scan of (base, head]: a checkpoint+cleanup landing during a
         long read window removes manifests a range scan would have
-        visited, silently hiding a racer's overlapping append).
+        visited, silently hiding a racer's overlapping append.
         Net-state is also the right OCC question: a racer whose adds
         were themselves removed again by ``head`` leaves no rows for
         this commit to conflict with. Refuses when head's file view
@@ -1351,23 +1302,187 @@ class TableLog:
             if n not in base_snap
         }
 
-    def _touched_files(self, keys: list, snap: dict | None = None) -> list[str]:
-        """Files whose stats envelope contains ANY of ``keys``; files
-        without stats are conservatively touched. Driver arithmetic on
-        the manifest (|files| entries) with sorted keys + bisect."""
+    def _select_files(
+        self,
+        snap: dict[str, dict],
+        *,
+        keys: list | None = None,
+        key_between: tuple | None = None,
+        col_between: dict[str, tuple] | None = None,
+        probe: list[int] | None = None,
+    ) -> list[str]:
+        """The files of ``snap`` (in snapshot order) a predicate may
+        touch: the ``stats_col`` envelope holds one of ``keys`` and
+        meets ``key_between``, each ``col_between`` envelope meets its
+        range, and the Bloom bitset has every ``probe`` bit. A file
+        lacking the envelope or bitset a test needs is kept, because
+        its disjointness cannot be proven. Driver arithmetic on the
+        manifest: ``keys`` are sorted once and bisected per file."""
         import bisect
 
-        skeys = sorted(keys)
-        touched = []
-        for name, st in (self.snapshot() if snap is None else snap).items():
+        skeys = None if keys is None else sorted(keys)
+
+        def hit(st: dict) -> bool:
             env = self._key_env(st)
-            if env is None:
-                touched.append(name)
-                continue
-            i = bisect.bisect_left(skeys, env[0])
-            if i < len(skeys) and skeys[i] <= env[1]:
-                touched.append(name)
-        return touched
+            if env is not None and skeys is not None:
+                i = bisect.bisect_left(skeys, env[0])
+                if i == len(skeys) or skeys[i] > env[1]:
+                    return False
+            ranges = [(env, key_between)] if key_between is not None else []
+            for c, rng in (col_between or {}).items():
+                e = (st or {}).get("cols", {}).get(c)
+                ranges.append((e and (e["min"], e["max"]), rng))
+            if any(
+                e is not None and (e[1] < lo or e[0] > hi)
+                for e, (lo, hi) in ranges
+            ):
+                return False
+            return probe is None or self._bloom_hits(st, probe)
+
+        return [n for n, st in snap.items() if hit(st)]
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        *,
+        op: str,
+        target: str,
+        action: str,
+        where: dict,
+        keep,
+        incoming: DataFrame | None = None,
+        txn: tuple[str, int] | None = None,
+        constraints_epoch: int | None = None,
+    ) -> int:
+        """The copy-on-write transaction behind ``merge_upsert``,
+        ``merge_apply_cdc``, ``delete_where`` and ``replace_where`` —
+        Delta's "rewrite the envelope-hit files". It captures the base
+        version, snapshot and deletion-vector map; touches only the
+        files ``_select_files(**where)`` picks; reads them with the BASE
+        vectors applied (a racer's vector landing mid-read must
+        conflict, not leak in); lands ``keep(existing)`` together with
+        ``incoming``; and commits the landed files in place of the
+        touched ones. Every other file survives by name: a batch
+        touching 0.1 % of the key space rewrites 0.1 % of the table.
+        With nothing touched and no ``incoming`` the commit carries no
+        data but still records ``txn``.
+
+        Conflicts, checked on every commit retry against the new head:
+        a net add since base that ``where`` also picks (a racer's row
+        for a merged key would coexist with the merge's, a racer's row
+        in a deleted range would survive the delete), and a deletion
+        vector changed on a touched file (the rewrite would resurrect
+        the racer's deletes). Both are diffed through checkpoint-aware
+        endpoint views, so a checkpoint plus manifest cleanup during
+        the read cannot hide a racer. A racer landing after a
+        validation makes the CAS fail, so the loop revalidates."""
+        base = self.latest_version()
+        base_snap = self.snapshot(base)
+        base_dvm = self._dv_map_checked(base)
+        touched = self._select_files(base_snap, **where)
+
+        def _validate(head):
+            if head is None or head == base:
+                return
+            added = self._added_since(base_snap, head, action)
+            hit = sorted(self._select_files(added, **where))
+            if hit:
+                raise CommitConflict(
+                    "concurrent commits added files overlapping the "
+                    f"{target}: {hit}; re-read and re-apply the {action}"
+                )
+            dv_hit = self._dv_changes_since(base_dvm, head, touched=touched)
+            if dv_hit:
+                raise CommitConflict(
+                    "concurrent deletion vectors landed on files this "
+                    f"{action} rewrites: {dv_hit}; re-apply the {action}"
+                )
+
+        rows = incoming
+        if touched:
+            kept = keep(self._scan_files(spark, touched, dvm=base_dvm))
+            rows = (
+                kept
+                if incoming is None
+                else kept.unionByName(incoming.select(*kept.columns))
+            )
+        adds = [] if rows is None else self._land_files(rows)
+        return self.commit(
+            add=adds,
+            remove=touched,
+            op=op,
+            stats=self._file_stats(spark, adds),
+            txn=txn,
+            validate=_validate,
+            constraints_epoch=constraints_epoch,
+        )
+
+    def _outside(self, key_between: tuple):
+        """Rows outside the ``stats_col`` range [lo, hi]. A NULL key is
+        outside too: three-valued BETWEEN is NULL, not true, so a bare
+        ``~between`` would drop it from a delete's survivors and let it
+        through a replace's range check."""
+        from pyspark.sql import functions as F
+
+        c = F.col(self.stats_col)
+        return c.isNull() | ~c.between(*key_between)
+
+    def _key_profile(self, batch: DataFrame, key_col: str, is_delete) -> list:
+        """ONE aggregate job over a merge batch: per key ``k``, whether
+        it mixes delete and upsert rows and its upsert-row count
+        ``n_up``. The keys are the pruning list, and the profile is what
+        Delta's multiple-source-match error is raised from (a key with
+        both ops, or several upserts, is ambiguous: they would ALL land
+        after the anti-join removes the stored row). Bounded: the batch
+        is small by the merge contract."""
+        from pyspark.sql import functions as F
+
+        return (
+            batch.select(F.col(key_col).alias("k"), is_delete.alias("d"))
+            .groupBy("k")
+            .agg(
+                (F.max("d") & ~F.min("d")).alias("mixed"),
+                F.sum(F.when(~F.col("d"), 1).otherwise(0)).alias("n_up"),
+            )
+            .collect()
+        )
+
+    def _merge(
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        upserts: DataFrame,
+        key_col: str,
+        keys: list,
+        *,
+        op: str,
+        action: str,
+        txn: tuple[str, int] | None,
+        constraints_epoch: int,
+    ) -> int:
+        """``merge_apply_cdc``'s core run (``merge_upsert`` is the run
+        with no delete rows): rewrite the files whose envelope holds a
+        ``batch`` key without the stored rows of every batch key, and
+        add ``upserts``. The batch's key set is broadcast into the
+        anti-join — the same smallness assumption as Delta's MERGE
+        source side being the small relation."""
+        from pyspark.sql import functions as F
+
+        return self._rewrite(
+            spark,
+            op=op,
+            target="merged key set",
+            action=action,
+            where={"keys": keys},
+            keep=lambda existing: existing.join(
+                F.broadcast(batch.select(key_col).distinct()),
+                key_col,
+                "left_anti",
+            ),
+            incoming=upserts,
+            txn=txn,
+            constraints_epoch=constraints_epoch,
+        )
 
     def merge_upsert(
         self,
@@ -1379,120 +1494,47 @@ class TableLog:
     ) -> int:
         """Copy-on-write MERGE (latest-wins upsert): rewrite ONLY the
         files whose stats envelope contains a changed key; every other
-        file survives untouched — at scale a CDC batch touching 0.1 %
-        of the key space rewrites 0.1 % of the table, not all of it.
+        file survives untouched (see :meth:`_rewrite`).
 
         Contract: ``updates`` is a bounded CDC batch (its key set is
         collected to the driver for file pruning and broadcast into the
-        anti-join — the same smallness assumption as Delta's MERGE
-        source side being the small relation). Matched keys take the
-        update row; unmatched update keys are inserts.
+        anti-join). Matched keys take the update row; unmatched update
+        keys are inserts. NULL keys (unsortable against real keys, and
+        never matched by the anti-join — re-inserted on every batch)
+        and several rows for one key are refused before anything
+        lands.
 
         Concurrency: beyond the remove-liveness check every commit
-        gets, the merge validates ON EACH COMMIT RETRY that no commit
-        after its base snapshot added a file whose stats envelope
-        overlaps the merged keys (predicate-level conflict detection —
-        a racing append of key K would otherwise coexist with the
-        merge's row for K). A racer landing after a validation makes
-        the CAS fail, so the loop revalidates against the new head."""
-        import bisect
-
+        gets, each commit retry refuses a racer's file whose envelope
+        overlaps the merged keys (predicate-level conflict detection)
+        or a racer's deletion vector on a rewritten file."""
         from pyspark.sql import functions as F
 
         # carried rows already passed at their own write time; only the
         # incoming CDC rows need CHECK enforcement
         cepoch = self._enforce_constraints(updates)
-
-        # ONE aggregate job yields the pruning key list AND the per-key
-        # multiplicities (the batch is bounded by contract, so a count
-        # per key costs the same driver traffic as the bare key list)
-        key_counts = (
-            updates.groupBy(F.col(key_col).alias("k"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        keys = [r["k"] for r in key_counts]
-        # fail fast on NULL merge keys (mirrors the non-orderable-stats
-        # check): None is unsortable against real keys, and a NULL-key
-        # update row can never match the left_anti join — it would be
-        # re-inserted as a duplicate on every batch
+        profile = self._key_profile(updates, key_col, F.lit(False))
+        keys = [r["k"] for r in profile]
         if any(k is None for k in keys):
             raise ValueError(
                 f"merge_upsert: updates contain NULL in key column "
                 f"{key_col!r}; merge keys must be non-NULL"
             )
-        # >1 update row per key would ALL insert after the left_anti
-        # removes the existing row, leaving duplicate keys — the Delta
-        # MERGE multiple-source-match error, surfaced before any file
-        # lands (ADVICE r6 #2)
-        if any(r["n"] > 1 for r in key_counts):
+        if any(r["n_up"] > 1 for r in profile):
             raise ValueError(
                 f"merge_upsert: multiple update rows share a {key_col!r} "
                 "key; latest-wins is undefined without an ordering column "
                 "— dedup the batch upstream (Delta multiple-match error)"
             )
-        skeys = sorted(keys)
-        base = self.latest_version()
-        base_snap = self.snapshot(base)
-        base_dvm = self._dv_map_checked(base)
-
-        def _overlaps(st: dict) -> bool:
-            env = self._key_env(st)
-            if env is None:
-                return True  # cannot prove disjointness
-            i = bisect.bisect_left(skeys, env[0])
-            return i < len(skeys) and skeys[i] <= env[1]
-
-        def _validate(head):
-            if head is None or head == base:
-                return
-            # NET adds since base, checkpoint-aware (a raw manifest
-            # scan of (base, head] could be blinded by a concurrent
-            # checkpoint + cleanup — the ADVICE r11 #1 class)
-            added = self._added_since(base_snap, head, "merge")
-            hit = sorted(n for n, st in added.items() if _overlaps(st))
-            if hit:
-                raise CommitConflict(
-                    "concurrent commits added files overlapping the "
-                    f"merged key set: {hit}; re-read and re-derive the merge"
-                )
-            # a racer's deletion vector on a file this merge READ
-            # changes its content without changing the file set — the
-            # rewrite would resurrect the racer's deletes (detected by
-            # the checkpoint-aware endpoint diff)
-            dv_hit = self._dv_changes_since(base_dvm, head, touched=touched)
-            if dv_hit:
-                raise CommitConflict(
-                    "concurrent deletion vectors landed on files this "
-                    f"merge rewrites: {dv_hit}; re-derive"
-                )
-
-        touched = self._touched_files(keys, base_snap)
-        if not touched:
-            adds = self._land_files(updates)
-            return self.commit(
-                add=adds,
-                op="merge",
-                stats=self._file_stats(spark, adds),
-                txn=txn,
-                validate=_validate,
-                constraints_epoch=cepoch,
-            )
-        # scan with the SAME base dv view the validator diffs against —
-        # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
-        keep = existing.join(
-            F.broadcast(updates.select(key_col).distinct()), key_col, "left_anti"
-        )
-        rewritten = keep.unionByName(updates.select(*existing.columns))
-        adds = self._land_files(rewritten)
-        return self.commit(
-            add=adds,
-            remove=touched,
+        return self._merge(
+            spark,
+            updates,
+            updates,
+            key_col,
+            keys,
             op="merge",
-            stats=self._file_stats(spark, adds),
+            action="merge",
             txn=txn,
-            validate=_validate,
             constraints_epoch=cepoch,
         )
 
@@ -1515,101 +1557,37 @@ class TableLog:
         envelope intersects ANY batch key rewrite; deletes of absent
         keys are no-ops; same smallness contract, txn exactly-once,
         and predicate-level retry conflict detection as merge_upsert."""
-        import bisect
-
         from pyspark.sql import functions as F
 
-        # NULL-safe op classification (ADVICE r6 #1): the contract says
-        # anything other than 'D' is an upsert, and that must include a
-        # NULL op — a plain != would evaluate NULL, silently dropping
-        # the row from upserts while its key still enters the delete
-        # rewrite (silent data loss)
+        # NULL-safe op classification: anything other than 'D' is an
+        # upsert, a NULL op included — a plain != would evaluate NULL,
+        # silently dropping the row from upserts while its key still
+        # enters the delete rewrite (silent data loss)
         is_delete = F.col(op_col).eqNullSafe("D")
         upserts = batch.filter(~is_delete).drop(op_col)
         cepoch = self._enforce_constraints(upserts)
-        # ONE aggregate job over the batch yields the pruning key list
-        # AND the per-key op profile. Fail fast, as Delta's MERGE errors
-        # on multiple source matches (ADVICE r6 #1/#2): a key carrying
-        # BOTH a delete and an upsert is ambiguous (which wins depends
-        # on arbitrary order), and >1 upsert row per key would ALL
-        # insert after the left_anti — duplicate keys in the table. The
-        # null-safe is_delete means NULL ops are counted, not ignored.
-        key_profile = (
-            batch.select(F.col(key_col).alias("k"), is_delete.alias("d"))
-            .groupBy("k")
-            .agg(
-                F.countDistinct("d").alias("n_ops"),
-                F.sum(F.when(~F.col("d"), 1).otherwise(0)).alias("n_up"),
-            )
-            .collect()
-        )
-        if any(r["n_ops"] > 1 or r["n_up"] > 1 for r in key_profile):
+        profile = self._key_profile(batch, key_col, is_delete)
+        if any(r["mixed"] or r["n_up"] > 1 for r in profile):
             raise ValueError(
                 "merge_apply_cdc: a key carries conflicting ops in one "
                 "batch (delete+upsert, or multiple upserts); resolve "
                 "upstream (Delta multiple-match error)"
             )
-        keys = [r["k"] for r in key_profile]
+        keys = [r["k"] for r in profile]
         if any(k is None for k in keys):
             raise ValueError(
                 f"merge_apply_cdc: batch contains NULL in key column "
                 f"{key_col!r}; merge keys must be non-NULL"
             )
-        skeys = sorted(keys)
-        base = self.latest_version()
-        base_snap = self.snapshot(base)
-        base_dvm = self._dv_map_checked(base)
-
-        def _overlaps(st: dict) -> bool:
-            env = self._key_env(st)
-            if env is None:
-                return True
-            i = bisect.bisect_left(skeys, env[0])
-            return i < len(skeys) and skeys[i] <= env[1]
-
-        def _validate(head):
-            if head is None or head == base:
-                return
-            added = self._added_since(base_snap, head, "CDC merge")
-            hit = sorted(n for n, st in added.items() if _overlaps(st))
-            if hit:
-                raise CommitConflict(
-                    "concurrent commits added files overlapping the "
-                    f"CDC key set: {hit}; re-read and re-derive the merge"
-                )
-            dv_hit = self._dv_changes_since(base_dvm, head, touched=touched)
-            if dv_hit:
-                raise CommitConflict(
-                    "concurrent deletion vectors landed on files this "
-                    f"CDC merge rewrites: {dv_hit}; re-derive"
-                )
-
-        touched = self._touched_files(keys, base_snap)
-        if not touched:
-            adds = self._land_files(upserts)
-            return self.commit(
-                add=adds,
-                op="merge_cdc",
-                stats=self._file_stats(spark, adds),
-                txn=txn,
-                validate=_validate,
-                constraints_epoch=cepoch,
-            )
-        # scan with the SAME base dv view the validator diffs against —
-        # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
-        keep = existing.join(
-            F.broadcast(batch.select(key_col).distinct()), key_col, "left_anti"
-        )
-        rewritten = keep.unionByName(upserts.select(*existing.columns))
-        adds = self._land_files(rewritten)
-        return self.commit(
-            add=adds,
-            remove=touched,
+        return self._merge(
+            spark,
+            batch,
+            upserts,
+            key_col,
+            keys,
             op="merge_cdc",
-            stats=self._file_stats(spark, adds),
+            action="CDC merge",
             txn=txn,
-            validate=_validate,
             constraints_epoch=cepoch,
         )
 
@@ -1622,71 +1600,26 @@ class TableLog:
     ) -> int:
         """Copy-on-write DELETE of the ``stats_col`` range [lo, hi]:
         rewrite ONLY the files whose stats envelope intersects the
-        range, dropping the matching rows; disjoint files survive by
-        name — the Delta ``DELETE WHERE`` shape, and the GDPR/retention
-        primitive a 100 TB corpus needs (a deletion touching 0.1 % of
-        the key space rewrites 0.1 % of the files).
+        range, dropping the matching rows (rows with a NULL key never
+        match, Delta's DELETE WHERE semantics); disjoint files survive
+        by name — the GDPR/retention primitive a 100 TB corpus needs.
 
-        Concurrency mirrors merge_upsert: on every commit retry, any
-        racer commit since this delete's base snapshot that ADDED a
-        file overlapping [lo, hi] raises CommitConflict (otherwise the
-        racer's rows in the deleted range would survive, silently
-        violating the delete's predicate). A no-file-touched delete
-        still lands an (empty) versioned commit so ``txn`` idempotence
-        has a ledger entry."""
-        from pyspark.sql import functions as F
-
+        Concurrency (see :meth:`_rewrite`): any racer commit since this
+        delete's base that ADDED a file overlapping [lo, hi] raises
+        CommitConflict, since the racer's rows in the deleted range
+        would survive. A no-file-touched delete still lands an (empty)
+        versioned commit so ``txn`` idempotence has a ledger entry."""
         if self.stats_col is None:
             raise ValueError("delete_where requires a stats_col-configured table")
-        lo, hi = key_between
-        base = self.latest_version()
-        base_snap = self.snapshot(base)
-        base_dvm = self._dv_map_checked(base)
-
-        def _overlaps(st: dict) -> bool:
-            env = self._key_env(st)
-            if env is None:
-                return True  # cannot prove disjointness
-            return env[1] >= lo and env[0] <= hi
-
-        def _validate(head):
-            if head is None or head == base:
-                return
-            added = self._added_since(base_snap, head, "delete")
-            bad = sorted(n for n, st in added.items() if _overlaps(st))
-            if bad:
-                raise CommitConflict(
-                    "concurrent commits added files overlapping the "
-                    f"deleted range: {bad}; re-read and re-apply the delete"
-                )
-            dv_hit = self._dv_changes_since(base_dvm, head, touched=touched)
-            if dv_hit:
-                raise CommitConflict(
-                    "concurrent deletion vectors landed on files this "
-                    f"delete rewrites: {dv_hit}; re-apply"
-                )
-
-        touched = [n for n, st in base_snap.items() if _overlaps(st)]
-        if not touched:
-            return self.commit(op="delete", txn=txn, validate=_validate)
-        # scan with the SAME base dv view the validator diffs against —
-        # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
-        # NULL-key rows never satisfy [lo, hi] (three-valued BETWEEN is
-        # NULL, not true), so a range DELETE must KEEP them — a bare
-        # ~between() would evaluate to NULL and silently drop them
-        keep = existing.filter(
-            F.col(self.stats_col).isNull()
-            | ~F.col(self.stats_col).between(lo, hi)
-        )
-        adds = self._land_files(keep)
-        return self.commit(
-            add=adds,
-            remove=touched,
+        outside = self._outside(key_between)
+        return self._rewrite(
+            spark,
             op="delete",
-            stats=self._file_stats(spark, adds),
+            target="deleted range",
+            action="delete",
+            where={"key_between": key_between},
+            keep=lambda existing: existing.filter(outside),
             txn=txn,
-            validate=_validate,
         )
 
     def _dv_changes_since(
@@ -1703,7 +1636,7 @@ class TableLog:
         would let a rewrite resurrect the racer's deleted rows.
 
         Resolved through the CHECKPOINT-AWARE ``dv_map(head)`` instead
-        of a raw manifest scan of (base, head] (ADVICE r11 #1): a
+        of a raw manifest scan of (base, head]: a
         checkpoint+cleanup landing during a long rewrite read window
         removes manifests a raw range scan would have visited,
         silently hiding the racer's dv commit. Diffing the endpoint
@@ -1731,31 +1664,13 @@ class TableLog:
         return sorted(f for f in scope if base_dvm.get(f) != head_dvm.get(f))
 
     def _dv_row_limit(self, spark: SparkSession) -> int:
-        """Default bound on TOTAL active deletion-vector rows — tied to
-        the broadcast threshold, because every subsequent ``_scan_files``
-        read broadcasts the active vectors into its anti-join: the
-        "vectors are small by contract" docstring becomes an ENFORCED
-        contract (VERDICT r11 #3). ~64 bytes/row covers the (file, pos)
-        pair plus broadcast-hash-relation overhead."""
-        raw = str(
-            spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        ).strip().lower().rstrip("b")
-        mult = 1
-        if raw and raw[-1] in "kmgtp":
-            mult = {
-                "k": 1 << 10,
-                "m": 1 << 20,
-                "g": 1 << 30,
-                "t": 1 << 40,
-                "p": 1 << 50,
-            }[raw[-1]]
-            raw = raw[:-1]
-        nbytes = int(raw) * mult
-        if nbytes <= 0:  # broadcast disabled: fall back to the default 10MB
-            nbytes = 10 * (1 << 20)
-        return max(1, nbytes // 64)
+        """Default bound on TOTAL active deletion-vector rows. Every
+        ``_scan_files`` read broadcasts the active vectors into its
+        anti-join, so the bound is the driver's broadcast budget
+        (``sizing.broadcast_budget_bytes``) at ~64 bytes per row for
+        the (file, pos) pair plus hash-relation overhead: "vectors are
+        small by contract", enforced."""
+        return broadcast_budget_bytes(spark) // 64
 
     def delete_where_dv(
         self,
@@ -1792,14 +1707,14 @@ class TableLog:
         non-overlap for an arbitrary predicate. The check diffs the
         CHECKPOINT-AWARE endpoint views (snapshot + dv_map) instead of
         scanning raw manifests in (base, head], so a checkpoint+cleanup
-        landing mid-operation cannot blind it (ADVICE r11 #1); an
+        landing mid-operation cannot blind it; an
         unresolvable head view refuses loudly.
 
-        ``merge_schema`` mirrors :meth:`read` (ADVICE r11 #2): a
+        ``merge_schema`` mirrors :meth:`read`: a
         predicate referencing a column absent from older files needs
         the unioned schema, or its match set would depend on schema
         inference order. ``max_dv_rows`` (None = derived from the
-        broadcast threshold, :meth:`_dv_row_limit`) bounds the TOTAL
+        driver's broadcast budget, :meth:`_dv_row_limit`) bounds the TOTAL
         active dv rows after this commit — an oversized delete belongs
         on the copy-on-write ``delete_where`` / ``purge_deletes``
         path, and is rejected before anything lands."""
@@ -1820,7 +1735,7 @@ class TableLog:
         # one position set while recording another). Every consumer
         # materializes inside this method, so the cache is released
         # before returning — never registered in the global pin list a
-        # library caller has no way to drain (round-12 review #5).
+        # library caller has no way to drain.
         matches = tagged.filter(F.expr(predicate_sql)).select(
             F.col("__file").alias("file"), F.col("__pos").alias("pos")
         ).persist()
@@ -1858,7 +1773,7 @@ class TableLog:
         snapshot, and no stats envelope can prove non-overlap for an
         arbitrary predicate — so ANY net change to the data state
         (file set or dv state) since base conflicts. Endpoint views
-        are checkpoint-aware (ADVICE r11 #1); unresolvable views
+        are checkpoint-aware; unresolvable views
         refuse loudly."""
 
         def _validate(head):
@@ -1939,8 +1854,8 @@ class TableLog:
         per-file row totals) for a (file, pos) match set: unions the
         affected files' previous vectors in (entries REPLACE per file,
         so each new vector must be cumulative) and ENFORCES the
-        smallness contract ``_scan_files`` broadcasts on (VERDICT r11
-        #3): total active dv rows AFTER this commit — the new sidecar
+        smallness contract ``_scan_files`` broadcasts on: total active
+        dv rows AFTER this commit — the new sidecar
         plus the untouched files' vectors — must fit the broadcast
         budget, or every future read's anti-join degrades. Rejected
         BEFORE anything lands.
@@ -2013,7 +1928,7 @@ class TableLog:
         max_dv_rows: int | None = None,
     ) -> int:
         """Merge-on-read UPDATE — the other half of Delta's deletion-
-        vector protocol (VERDICT r11 missing #4 / next #6a): in ONE
+        vector protocol: in ONE
         atomic commit, mark every matching row's position deleted in
         its file's vector AND append the updated versions of those
         rows — no touched data file is rewritten, so an update hitting
@@ -2056,7 +1971,7 @@ class TableLog:
         # non-bit-deterministic predicate, and the full-table
         # predicate scan runs once, not once per consumer. Every
         # consumer materializes inside this method, so the cache is
-        # released before returning (round-12 review #5).
+        # released before returning.
         matched = tagged.filter(F.expr(predicate_sql)).persist()
         try:
             updated = matched.select(
@@ -2212,80 +2127,35 @@ class TableLog:
         rows instead — the idempotent-backfill primitive (re-running a
         day's pipeline replaces that day wholesale; no delete+append
         window where readers see neither). Rows of ``df`` OUTSIDE the
-        range are rejected up front: silently writing them would
-        corrupt ranges this commit never claimed to touch.
+        range, NULL keys included, are rejected up front: silently
+        writing them would corrupt ranges this commit never claimed to
+        touch.
 
         Copy-on-write + OCC exactly as delete_where: only
         envelope-intersecting files rewrite (their out-of-range rows
         are carried over), and a racer appending INTO the range between
         validation and CAS raises CommitConflict on the retry loop."""
-        from pyspark.sql import functions as F
-
         if self.stats_col is None:
             raise ValueError(
                 "replace_where requires a stats_col-configured table"
             )
         cepoch = self._enforce_constraints(df)
         lo, hi = key_between
-        if self.stats_col in df.columns:
-            # a NULL key does not satisfy [lo, hi] either — such a row
-            # is outside the replaced range and must be rejected, not
-            # silently written (bare ~between would let it through)
-            stray = df.filter(
-                F.col(self.stats_col).isNull()
-                | ~F.col(self.stats_col).between(lo, hi)
-            ).limit(1).count()
-            if stray:
-                raise ValueError(
-                    f"replace_where: incoming rows fall outside "
-                    f"[{lo}, {hi}] on {self.stats_col!r}"
-                )
-        base = self.latest_version()
-        base_snap = self.snapshot(base)
-        base_dvm = self._dv_map_checked(base)
-
-        def _overlaps(st: dict) -> bool:
-            env = self._key_env(st)
-            if env is None:
-                return True
-            return env[1] >= lo and env[0] <= hi
-
-        def _validate(head):
-            if head is None or head == base:
-                return
-            added = self._added_since(base_snap, head, "replace")
-            bad = sorted(n for n, st in added.items() if _overlaps(st))
-            if bad:
-                raise CommitConflict(
-                    "concurrent commits added files overlapping the "
-                    f"replaced range: {bad}; re-read and re-apply"
-                )
-            dv_hit = self._dv_changes_since(base_dvm, head, touched=touched)
-            if dv_hit:
-                raise CommitConflict(
-                    "concurrent deletion vectors landed on files this "
-                    f"replace rewrites: {dv_hit}; re-apply"
-                )
-
-        touched = [n for n, st in base_snap.items() if _overlaps(st)]
-        new_part = df
-        if touched:
-            # scan with the SAME base dv view the validator diffs
-            # against — a racer's vector must conflict, not leak in
-            existing = self._scan_files(spark, touched, dvm=base_dvm)
-            carried = existing.filter(
-                F.col(self.stats_col).isNull()
-                | ~F.col(self.stats_col).between(lo, hi)
-            ).select(*df.columns)
-            new_part = carried.unionByName(df)
-        adds = self._land_files(new_part)
-        return self.commit(
-            add=adds,
-            remove=touched,
+        outside = self._outside(key_between)
+        if self.stats_col in df.columns and df.filter(outside).limit(1).count():
+            raise ValueError(
+                f"replace_where: incoming rows fall outside "
+                f"[{lo}, {hi}] on {self.stats_col!r}"
+            )
+        return self._rewrite(
+            spark,
             op="replace",
-            stats=self._file_stats(spark, adds),
+            target="replaced range",
+            action="replace",
+            where={"key_between": key_between},
+            keep=lambda existing: existing.filter(outside).select(*df.columns),
+            incoming=df,
             txn=txn,
-            validate=_validate,
             constraints_epoch=cepoch,
         )
 
@@ -2342,58 +2212,34 @@ class TableLog:
             )
         if key_eq is not None and self.bloom_col is None:
             raise ValueError("key_eq requires a bloom_col-configured table")
-        probe = (
-            self._bloom_positions(spark, key_eq)
-            if key_eq is not None
-            else None
+        from pyspark.sql import functions as F
+
+        probe = None if key_eq is None else self._bloom_positions(spark, key_eq)
+        names = self._select_files(
+            snap, key_between=key_between, col_between=col_between, probe=probe
         )
-
-        def _survives(st: dict) -> bool:
-            if key_between is not None:
-                lo, hi = key_between
-                env = self._key_env(st)
-                if env is not None and not (env[1] >= lo and env[0] <= hi):
-                    return False
-            for c, (lo, hi) in (col_between or {}).items():
-                env = (st or {}).get("cols", {}).get(c)
-                if env is not None and not (env["max"] >= lo and env["min"] <= hi):
-                    return False
-            if probe is not None and not self._bloom_hits(st, probe):
-                return False
-            return True
-
-        names = list(snap)
-        all_pruned = False
-        if key_between is not None or col_between or key_eq is not None:
-            names = [n for n, st in snap.items() if _survives(st)]
-            if not names:
-                # every file pruned: still return a frame with the SAME
-                # schema a non-empty read would have (full file list,
-                # merge_schema honored) so shard unions don't diverge
-                names = list(snap)
-                all_pruned = True
         # deletion vectors active at THIS snapshot are subtracted at scan
         # time (merge-on-read); time travel to a pre-delete version sees
-        # the rows because that version's dv map lacks the vector
+        # the rows because that version's dv map lacks the vector. Every
+        # file pruned: still scan the full file list, so the frame has
+        # the SAME schema a non-empty read would have (merge_schema
+        # honored) and shard unions don't diverge
         df = self._scan_files(
-            spark, names, merge_schema=merge_schema, dvm=self._dv_map_checked(version)
+            spark,
+            names or list(snap),
+            merge_schema=merge_schema,
+            dvm=self._dv_map_checked(version),
         )
-        if key_between is not None or col_between or key_eq is not None:
-            from pyspark.sql import functions as F
-
-            if all_pruned:
-                df = df.filter(F.lit(False))
-            else:
-                if key_between is not None and self.stats_col in df.columns:
-                    df = df.filter(
-                        F.col(self.stats_col).between(*key_between)
-                    )
-                for c, (lo, hi) in (col_between or {}).items():
-                    if c in df.columns:
-                        df = df.filter(F.col(c).between(lo, hi))
-                if key_eq is not None and self.bloom_col in df.columns:
-                    # residual: bloom skipping has false positives
-                    df = df.filter(F.col(self.bloom_col) == F.lit(key_eq))
+        if not names:
+            return df.filter(F.lit(False))
+        if key_between is not None and self.stats_col in df.columns:
+            df = df.filter(F.col(self.stats_col).between(*key_between))
+        for c, (lo, hi) in (col_between or {}).items():
+            if c in df.columns:
+                df = df.filter(F.col(c).between(lo, hi))
+        if key_eq is not None and self.bloom_col in df.columns:
+            # residual: bloom skipping has false positives
+            df = df.filter(F.col(self.bloom_col) == F.lit(key_eq))
         return df
 
     def read_changes(
@@ -2511,7 +2357,7 @@ class TableLog:
         ``_change_type`` ('insert' | 'delete' | 'update_preimage' |
         'update_postimage') and ``_commit_version`` — lifting
         :meth:`read_changes`' documented refusal for the
-        DELETION-VECTOR case (round-12 growth tier): a dv commit's
+        DELETION-VECTOR case: a dv commit's
         row-level deletes ARE trackable, because the file's new
         cumulative vector minus its previous vector identifies exactly
         the positions that commit deleted, and their content is still
@@ -2544,8 +2390,8 @@ class TableLog:
         hi = head if until_version is None else until_version
         self._require_range_manifests(since_version, hi, "read_changes_cdf")
         # a base at-or-beyond the head means an empty range: versions
-        # that never existed have no dv state to resolve (round-12
-        # review #3 — mirror read_changes' empty-feed semantics)
+        # that never existed have no dv state to resolve (mirrors
+        # read_changes' empty-feed semantics)
         resolvable = (
             head is not None and 0 <= since_version <= head
         )
@@ -2701,12 +2547,7 @@ class TableLog:
         """(files opened, files total) for a stats-pruned range read —
         the manifest-level I/O measurement."""
         snap = self.snapshot(version)
-        lo, hi = key_between
-        opened = 0
-        for st in snap.values():
-            env = self._key_env(st)
-            opened += env is None or (env[1] >= lo and env[0] <= hi)
-        return opened, len(snap)
+        return len(self._select_files(snap, key_between=key_between)), len(snap)
 
     def pruned_file_count_multi(
         self, col_between: dict[str, tuple], version: int | None = None
@@ -2716,16 +2557,7 @@ class TableLog:
         recorded envelope intersects its range (missing envelopes keep
         the file conservatively)."""
         snap = self.snapshot(version)
-        opened = 0
-        for st in snap.values():
-            keep = True
-            for c, (lo, hi) in col_between.items():
-                env = (st or {}).get("cols", {}).get(c)
-                if env is not None and not (env["max"] >= lo and env["min"] <= hi):
-                    keep = False
-                    break
-            opened += keep
-        return opened, len(snap)
+        return len(self._select_files(snap, col_between=col_between)), len(snap)
 
     def vacuum(
         self, *, keep_versions: int = 2, grace_seconds: float = 600.0

@@ -24,7 +24,7 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.functions.columns import blankish
+from c3dc_etl_spark.functions.columns import missing_required
 from c3dc_etl_spark.schema.registry import SchemaRegistry
 
 
@@ -48,12 +48,9 @@ def frame_violations(df: DataFrame, node: str, registry: SchemaRegistry) -> Data
             continue
         c = F.col(p.name)
         if p.required:
-            missing = (
-                (c.isNull() | (F.size(F.filter(c, lambda v: v.isNotNull())) == 0))
-                if p.type == "array"
-                else (blankish(c) if p.type == "string" else c.isNull())
+            checks.append(
+                (p.name, missing_required(c, p.type), "required property missing")
             )
-            checks.append((p.name, missing, "required property missing"))
         if p.enum:
             if p.type == "array":
                 bad = c.isNotNull() & (

@@ -315,10 +315,10 @@ def test_exact_substring_spans_threshold_and_validation(spark):
         D.exact_substring_spans(docs, "text", "doc_id", min_len=1)
 
 
-def test_exact_substring_gram_never_crosses_exchange(spark):
+def test_exact_substring_gram_never_crosses_exchange(spark, monkeypatch):
     """VERDICT r11 #2: exact_substring_spans' scale contract is that
     the full-corpus L-byte gram column lives only in scan-side
-    projections. Force the NARROW path (broadcast_hash_rows=0) with
+    projections. Force the NARROW path (a zero broadcast budget) with
     every join forced to a shuffle strategy (broadcast off, AQE off —
     the exact regime where the old shape would shuffle grams L x
     corpus) and assert (a) results are identical to the default
@@ -371,10 +371,12 @@ def test_exact_substring_gram_never_crosses_exchange(spark):
         for k, v in confs.items():
             spark.conf.set(k, v)
         # NARROW path under forced shuffles: the adversarial regime
-        out = D.exact_substring_spans(
-            docs, "text", "doc_id", min_len=20, broadcast_hash_rows=0
-        )
-        got = {tuple(r) for r in out.collect()}
+        from c3dc_etl_spark import sizing
+
+        with monkeypatch.context() as m:
+            m.setattr(sizing, "broadcast_budget_bytes", lambda spark: 0)
+            out = D.exact_substring_spans(docs, "text", "doc_id", min_len=20)
+            got = {tuple(r) for r in out.collect()}
         assert got == expect and got
         exchanges, bad = gram_exchanges(out)
         assert not bad, f"full-corpus gram crossed an exchange: {bad}"

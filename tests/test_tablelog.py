@@ -235,6 +235,115 @@ def test_landing_file_count_follows_input_volume(spark, tmp_path):
     assert len(unsized.files()) == TableLog.LANDING_FILES
 
 
+def test_compact_target_partitions_on_stats_table(spark, tmp_path):
+    """compact(target_partitions=n) on a stats_col table lands exactly
+    n files, range-partitioned on the stats column so their envelopes
+    stay disjoint, with the rows unchanged."""
+    orders = _orders(spark)
+    log = TableLog(str(tmp_path / "t"), stats_col="o_orderkey")
+    log.append(orders.filter(F.col("o_orderstatus") == "F"))
+    log.append(orders.filter(F.col("o_orderstatus") != "F"))
+    log.compact(spark, target_partitions=2)
+    snap = log.snapshot()
+    assert len(snap) == 2
+    (lo_min, lo_max), (hi_min, hi_max) = sorted(
+        (st["min"], st["max"]) for st in snap.values()
+    )
+    assert lo_min <= lo_max < hi_min <= hi_max
+    assert _rows(log.read(spark)) == _rows(orders)
+
+
+def _kv(spark, keys, tag):
+    return spark.createDataFrame(
+        [(k, tag) for k in keys], "k bigint, v string"
+    )
+
+
+# the four copy-on-write writers, each aimed at keys 100..110 of a
+# 0..399 table: (commit op label, call)
+_COW_WRITERS = {
+    "merge_upsert": (
+        "merge",
+        lambda spark, log: log.merge_upsert(
+            spark, _kv(spark, range(100, 105), "new"), "k"
+        ),
+    ),
+    "merge_apply_cdc": (
+        "merge_cdc",
+        lambda spark, log: log.merge_apply_cdc(
+            spark,
+            _kv(spark, range(100, 103), "new")
+            .withColumn("op", F.lit("U"))
+            .unionByName(
+                _kv(spark, range(103, 105), "gone").withColumn("op", F.lit("D"))
+            ),
+            "k",
+        ),
+    ),
+    "delete_where": (
+        "delete",
+        lambda spark, log: log.delete_where(spark, (100, 110)),
+    ),
+    "replace_where": (
+        "replace",
+        lambda spark, log: log.replace_where(
+            spark, _kv(spark, range(100, 111), "new"), (100, 110)
+        ),
+    ),
+}
+
+# racers landing between the writer's base capture and its commit:
+# (racer action, whether the writer must raise CommitConflict)
+_COW_RACERS = {
+    # an append holding a key the writer merges, deletes or replaces
+    "overlapping_append": (
+        lambda spark, racer: racer.append(_kv(spark, [102], "racer")), True
+    ),
+    # a deletion vector on a file the writer rewrites (key 101 lies in
+    # every writer's touched files)
+    "dv_on_touched_file": (
+        lambda spark, racer: racer.delete_where_dv(spark, "k = 101"), True
+    ),
+    # an append far outside the writer's keys commutes with it
+    "disjoint_append": (
+        lambda spark, racer: racer.append(_kv(spark, [900], "racer")), False
+    ),
+}
+
+
+@pytest.mark.parametrize("racer_name", sorted(_COW_RACERS))
+@pytest.mark.parametrize("writer_name", sorted(_COW_WRITERS))
+def test_cow_writer_conflict_matrix(spark, tmp_path, writer_name, racer_name):
+    """The copy-on-write writers share one commit validator: a racer's
+    append that overlaps the writer's keys or range, or a racer's
+    deletion vector on a file the writer rewrites, raises
+    CommitConflict; a disjoint append commits beside the writer."""
+    op, write = _COW_WRITERS[writer_name]
+    race, conflicts = _COW_RACERS[racer_name]
+    log = TableLog(str(tmp_path / "t"), stats_col="k")
+    log.append(_kv(spark, range(400), "base"))
+    assert len(log.files()) > 1
+    real_commit = log.commit
+    fired = []
+
+    def racing_commit(**kw):
+        if not fired and kw.get("op") == op:
+            fired.append(True)
+            race(spark, TableLog(log.table_dir, stats_col="k"))
+        return real_commit(**kw)
+
+    log.commit = racing_commit
+    if conflicts:
+        with pytest.raises(CommitConflict):
+            write(spark, log)
+        assert fired and log._manifest(log.latest_version())["op"] != op
+        return
+    v = write(spark, log)
+    assert fired and v == log.latest_version() and log._manifest(v)["op"] == op
+    keys = [r["k"] for r in log.read(spark).select("k").collect()]
+    assert len(keys) == len(set(keys)) and 900 in keys
+
+
 def test_concurrent_appends_all_win_distinct_versions(spark, tmp_path):
     """A REAL commit race: 8 threads append through the same log
     concurrently; the hard-link CAS must serialize them into 8 distinct
@@ -1874,20 +1983,20 @@ def test_dv_row_counts_fold_and_driver_side_bound(spark, tmp_path):
     assert log2.dv_row_counts() == v2_counts
 
 
-def test_dv_row_limit_parses_all_size_suffixes(spark, tmp_path):
+def test_dv_row_limit_follows_broadcast_budget(spark, tmp_path):
+    """The DV row bound is the driver's broadcast budget at 64 bytes a
+    row: the vectors are an explicit broadcast, so the session's
+    auto-broadcast threshold does not move it."""
+    from c3dc_etl_spark import sizing
+
     log = TableLog(str(tmp_path / "t"))
+    expect = sizing.broadcast_budget_bytes(spark) // 64
+    assert log._dv_row_limit(spark) == expect
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     try:
-        for raw, expect in (
-            ("1048576", (1 << 20) // 64),
-            ("10m", (10 << 20) // 64),
-            ("2g", (2 << 30) // 64),
-            ("1t", (1 << 40) // 64),
-            ("-1", (10 << 20) // 64),  # disabled -> 10MB default
-        ):
-            spark.conf.set(key, raw)
-            assert log._dv_row_limit(spark) == expect, raw
+        spark.conf.set(key, "-1")
+        assert log._dv_row_limit(spark) == expect
     finally:
         spark.conf.set(key, old)
 
