@@ -9,7 +9,8 @@ etl/ccdi/c3dc_etl.py:1048-1169):
 2. one projected DataFrame per type group (M1), unionByName with
    allowMissingColumns — the fan-out is a plan-time dimension, so
    Catalyst sees a flat union of narrow projections (no shuffle);
-3. required-property record filter (P6).
+3. required-property record filter (P6), the ``union_required`` tail the
+   row-mapped builder shares.
 
 Everything is a narrow map over the source partitioning: a node build
 never shuffles. At 100 TB the cost profile is the parquet scan itself.
@@ -27,7 +28,7 @@ from c3dc_etl_spark.functions.columns import (
     missing_required,
     split_multi,
 )
-from c3dc_etl_spark.mapping.compiler import CompilerContext, compile_node_groups
+from c3dc_etl_spark.mapping.compiler import CompiledField, CompilerContext, compile_node_groups
 from c3dc_etl_spark.mapping.model import FieldMapping
 
 
@@ -111,9 +112,8 @@ def build_node(
         if uniq:
             source = sub_record_explode(source, uniq, id_source_col)
 
-    groups = compile_node_groups(node, node_maps, ctx)
-    frames: list[DataFrame] = []
-    for gi, compiled in groups.items():
+    branches = []
+    for compiled in compile_node_groups(node, node_maps, ctx).values():
         cols = [cf.column.alias(cf.prop) for cf in compiled]
         if extra_columns:
             cols += [F.lit(v).alias(k) for k, v in extra_columns.items()]
@@ -122,27 +122,32 @@ def build_node(
                 F.col(src).cast("string").alias(out)
                 for out, src in carry_columns.items()
             ]
-        frames.append(source.select(*cols))
-    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        branches.append((source.select(*cols), compiled))
+    return union_required(branches, node, ctx.registry)
 
-    # Props provably non-blank in EVERY group (e.g. {uuid} ids) need no
-    # P6 filter: the check is a tautology, and predicate pushdown would
-    # inline the id's md5 expression into a Filter node where — unlike
-    # ProjectExec — codegen does no subexpression elimination, so the
-    # hash would evaluate ~6x per row for nothing. A group that lacks
-    # the prop contributes nothing to its set, so union-filled nulls
-    # (allowMissingColumns) can never be skipped past.
-    group_nonblank = [
-        {cf.prop for cf in compiled if cf.never_blank}
-        for compiled in groups.values()
-    ]
-    always_nonblank: set[str] = (
-        set.intersection(*group_nonblank) if group_nonblank else set()
+
+def union_required(
+    branches: list[tuple[DataFrame, list[CompiledField]]], node: str, registry
+) -> DataFrame:
+    """Union the per-type-group (or per-rule) projections by name, each
+    with the fields it compiled, and drop records missing any
+    schema-required property (P6).
+
+    Props provably non-blank in EVERY branch (e.g. {uuid} ids) need no
+    P6 filter: the check is a tautology, and predicate pushdown would
+    inline the id's md5 expression into a Filter node where — unlike
+    ProjectExec — codegen does no subexpression elimination, so the
+    hash would evaluate ~6x per row for nothing. A branch that lacks
+    the prop contributes nothing to its set, so union-filled nulls
+    (allowMissingColumns) can never be skipped past."""
+    df = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), [f for f, _ in branches]
     )
-
-    # P6: drop records missing any schema-required property
-    for req in ctx.registry.required_props(node):
+    always_nonblank = set.intersection(
+        *[{cf.prop for cf in fields if cf.never_blank} for _, fields in branches]
+    )
+    for req in registry.required_props(node):
         if req not in df.columns or req in always_nonblank:
             continue
-        df = df.filter(~missing_required(req, ctx.registry.prop(node, req).type))
+        df = df.filter(~missing_required(req, registry.prop(node, req).type))
     return df

@@ -2,20 +2,28 @@
 Column expressions.
 
 The reference dispatches macros through a hard-coded if/elif chain inside
-its per-row evaluator (etl/ccdi/c3dc_etl.py:852-944 and the TARGET/MCI
-copies); here each macro is a builder returning a Column, registered by
-name — the engine's sanctioned extension point (add a builder, get a new
-macro everywhere). Every builder is UDF-free; lookup macros compile the
-(small, driver-side) lookup dicts into literal maps the plan broadcasts.
+its per-row evaluator (etl/ccdi/c3dc_etl.py:852-944) and re-implements
+{uuid} and {sum_abs_first} in its MCI row-mapped builder
+(etl/mci/c3dc_row_mapped_builder.py:254-266). Here each macro is ONE
+builder, registered by name, that both node builders reach: the mapping
+compiler for a field's "{name}" arm and the row-mapped builder for a
+rule's "{name}" / "{name(args)}" cell — the engine's sanctioned
+extension point (add a builder, get a new macro everywhere). Every
+builder is UDF-free; lookup macros compile the (small, driver-side)
+lookup dicts into literal maps the plan broadcasts.
 
-Returns (column, is_final): is_final=True means the macro already produced
-the schema-typed value (e.g. {race} emits the sorted enum array) and the
+A builder takes one ``MacroCall`` and the compiler context, and returns
+(column, is_final): is_final=True means the macro already produced the
+schema-typed value (e.g. {race} emits the sorted enum array) and the
 compiler must not re-convert it.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column
@@ -25,33 +33,45 @@ from c3dc_etl_spark.functions.columns import (
     blankish,
     deterministic_uuid,
     norm,
-    nullif_blank,
     race_merge,
 )
 
 if TYPE_CHECKING:  # only for annotations; avoids a circular import
     from c3dc_etl_spark.mapping.compiler import CompilerContext
-    from c3dc_etl_spark.mapping.model import FieldMapping
 
-MacroBuilder = Callable[["FieldMapping", "CompilerContext", str | None], tuple[Column, bool]]
 
-_REGISTRY: dict[str, MacroBuilder] = {}
+@dataclass(frozen=True)
+class MacroCall:
+    """One macro invocation: the output ``node``.``prop`` it fills; the
+    ``group`` tag that keeps {uuid} ids distinct per type group (mapped
+    nodes) or per rule ('rule<index>', row-mapped nodes); its ``args`` —
+    source column names, or 'quoted' literals; and the ``default`` a
+    non-numeric addend takes."""
+
+    node: str
+    prop: str
+    group: str
+    args: tuple[str, ...] = ()
+    default: object = None
+
+
+MacroBuilder = Callable[[MacroCall, "CompilerContext"], tuple[Column, bool]]
+
+MACROS: dict[str, MacroBuilder] = {}
 
 
 def macro(name: str):
     def deco(fn: MacroBuilder) -> MacroBuilder:
-        _REGISTRY[name] = fn
+        MACROS[name] = fn
         return fn
 
     return deco
 
 
-def build_macro(
-    name: str, arg: str | None, mapping: "FieldMapping", ctx: "CompilerContext"
-) -> tuple[Column, bool]:
-    if name not in _REGISTRY:
+def build_macro(name: str, call: MacroCall, ctx: "CompilerContext") -> tuple[Column, bool]:
+    if name not in MACROS:
         raise KeyError(f"unknown macro {{{name}}}")
-    return _REGISTRY[name](mapping, ctx, arg)
+    return MACROS[name](call, ctx)
 
 
 def _lookup_map(d: dict[str, str]) -> Column:
@@ -65,80 +85,73 @@ def _lookup_map(d: dict[str, str]) -> Column:
 # --------------------------------------------------------------------------
 # V8 {uuid}
 @macro("uuid")
-def _uuid(mapping, ctx, arg):
+def _uuid(call, ctx):
     """Content-derived UUIDv4-shaped id from (seed, node, group, stable
     row identity) — deterministic at any parallelism (SURVEY §7.4-1
     replaces the reference's sequential seeded RNG,
     etl/ccdi/c3dc_etl.py:415-417)."""
-    identity = [F.lit(mapping.output_node), F.lit(mapping.type_group_index)] + [
-        F.col(c) for c in ctx.row_identity
-    ]
+    identity = [F.lit(call.node), F.lit(call.group)] + [F.col(c) for c in ctx.row_identity]
     return deterministic_uuid(*identity, seed=ctx.uuid_seed), False
 
 
-# V10 {sum}: horizontal sum of the compound source fields; null if ANY
-# addend is blank; non-numeric addend -> default (etl/ccdi/c3dc_etl.py:905-935)
-@macro("sum")
-def _sum(mapping, ctx, arg):
-    cols = mapping.source_columns()
-    nums = [F.col(c).cast("string").try_cast("double") for c in cols]
-    any_blank = None
-    for c in cols:
-        b = blankish(F.col(c))
-        any_blank = b if any_blank is None else (any_blank | b)
-    total = nums[0]
-    for n in nums[1:]:
-        total = total + n
-    value = F.when(any_blank, F.lit(None).cast("double")).otherwise(total)
-    if mapping.default_value is not None:
-        # non-numeric addend (cast -> null while non-blank) takes the default
-        value = F.when(
-            ~any_blank & value.isNull(), F.lit(mapping.default_value).cast("double")
-        ).otherwise(value)
-    return value, False
+def _horizontal_sum(abs_first: bool) -> MacroBuilder:
+    """V10 {sum} (etl/ccdi/c3dc_etl.py:905-935) and, with abs() of the
+    first addend, V11 {sum_abs_first} — ages relative to diagnosis
+    (etl/mci/c3dc_etl.py:1733-1766): null if ANY source addend is blank;
+    a non-numeric addend (cast -> null while non-blank) takes the
+    default. A 'quoted' argument is a literal addend, never blank (the
+    reference AST-parses both shapes)."""
+
+    def build(call, ctx):
+        addends: list[Column] = []
+        blanks: list[Column] = []
+        for a in call.args:
+            if len(a) >= 2 and a[0] == a[-1] == "'":
+                addends.append(F.lit(a[1:-1]).try_cast("double"))
+            else:
+                addends.append(F.col(a).cast("string").try_cast("double"))
+                blanks.append(blankish(F.col(a)))
+        if abs_first:
+            addends[0] = F.abs(addends[0])
+        any_blank = reduce(operator.or_, blanks, F.lit(False))
+        value = F.when(any_blank, F.lit(None).cast("double")).otherwise(
+            reduce(operator.add, addends)
+        )
+        if call.default is not None:
+            value = F.when(
+                ~any_blank & value.isNull(), F.lit(call.default).cast("double")
+            ).otherwise(value)
+        return value, False
+
+    return build
 
 
-# V11 {sum_abs_first}: as {sum} but abs() of the first addend — ages
-# relative to diagnosis (etl/mci/c3dc_etl.py:1733-1766)
-@macro("sum_abs_first")
-def _sum_abs_first(mapping, ctx, arg):
-    cols = mapping.source_columns()
-    first = F.abs(F.col(cols[0]).cast("string").try_cast("double"))
-    rest = [F.col(c).cast("string").try_cast("double") for c in cols[1:]]
-    any_blank = None
-    for c in cols:
-        b = blankish(F.col(c))
-        any_blank = b if any_blank is None else (any_blank | b)
-    total = first
-    for n in rest:
-        total = total + n
-    return F.when(any_blank, F.lit(None).cast("double")).otherwise(total), False
+macro("sum")(_horizontal_sum(abs_first=False))
+macro("sum_abs_first")(_horizontal_sum(abs_first=True))
 
 
 # V12 {race}: merge compound [race, ethnicity] into a sorted enum array
 @macro("race")
-def _race(mapping, ctx, arg):
-    cols = mapping.source_columns()
-    pvs = ctx.registry.enum_values(mapping.output_node, mapping.output_prop)
-    return race_merge(F.col(cols[0]), F.col(cols[1]), pvs), True
+def _race(call, ctx):
+    pvs = ctx.registry.enum_values(call.node, call.prop)
+    return race_merge(F.col(call.args[0]), F.col(call.args[1]), pvs), True
 
 
 # V13 {find_enum_value}: source is a code ('8000/0', 'C71.9'); emit the PV
 # whose 'CODE : TERM' prefix matches; miss -> null -> the coalesce chain
 # falls through to the next arm (etl/target/c3dc_etl.py:1024-1033,1113-1118)
 @macro("find_enum_value")
-def _find_enum_value(mapping, ctx, arg):
-    code_map = ctx.registry.enum_code_map(mapping.output_node, mapping.output_prop)
-    src = F.col(mapping.source_columns()[0])
-    return _lookup_map(code_map)[norm(src)], True
+def _find_enum_value(call, ctx):
+    code_map = ctx.registry.enum_code_map(call.node, call.prop)
+    return _lookup_map(code_map)[norm(F.col(call.args[0]))], True
 
 
 # V14 {diagnosis} (MCI): ICD-O code -> term -> diagnosis PV via the
 # broadcast icdo lookup (etl/mci/c3dc_etl.py:1540-1561)
 @macro("diagnosis")
-def _diagnosis(mapping, ctx, arg):
-    code_pv = ctx.registry.enum_code_map(mapping.output_node, mapping.output_prop)
-    pvs = ctx.registry.enum_values(mapping.output_node, mapping.output_prop)
+def _diagnosis(call, ctx):
+    code_pv = ctx.registry.enum_code_map(call.node, call.prop)
+    pvs = ctx.registry.enum_values(call.node, call.prop)
     term_pv = {
         pv.split(" : ", 1)[1].strip().casefold(): pv for pv in pvs if " : " in pv
     }
@@ -149,24 +162,22 @@ def _diagnosis(mapping, ctx, arg):
         for code, term in ctx.lookups.get("icdo", {}).items()
         if term.strip().casefold() in term_pv
     }
-    src = F.col(mapping.source_columns()[0])
-    return _lookup_map({**derived, **code_pv})[norm(src)], True
+    return _lookup_map({**derived, **code_pv})[norm(F.col(call.args[0]))], True
 
 
 # V15 {diagnosis_category} (MCI): {diagnosis} then diagnosis -> category
 @macro("diagnosis_category")
-def _diagnosis_category(mapping, ctx, arg):
+def _diagnosis_category(call, ctx):
     cat = {k.casefold(): v for k, v in ctx.lookups.get("diagnosis_category", {}).items()}
-    src = F.col(mapping.source_columns()[0])
-    return _lookup_map(cat)[norm(src)], True
+    return _lookup_map(cat)[norm(F.col(call.args[0]))], True
 
 
 # V16 {laterality} (MCI): first non-empty of N source fields that
 # case-matches the enum (etl/mci/c3dc_etl.py:1647-1686); the >1-populated
 # assertion is a validate-layer check, not per-row control flow
 @macro("laterality")
-def _laterality(mapping, ctx, arg):
-    pvs = ctx.registry.enum_values(mapping.output_node, mapping.output_prop)
+def _laterality(call, ctx):
+    pvs = ctx.registry.enum_values(call.node, call.prop)
     pv_map = _lookup_map({pv.casefold(): pv for pv in pvs})
-    candidates = [pv_map[norm(F.col(c))] for c in mapping.source_columns()]
+    candidates = [pv_map[norm(F.col(c))] for c in call.args]
     return F.coalesce(*candidates) if len(candidates) > 1 else candidates[0], True

@@ -9,9 +9,11 @@ naturally yields to the next, which implements both first-match-wins (V7)
 and lookup fall-through in a single construct, entirely inside
 whole-stage codegen.
 
-Macros (V8-V16) are compiled by the registry in c3dc_etl_spark.macros;
-the result is still a Column — lookups become literal-map getItem calls
-(constant-folded, shipped with the plan), never per-row Python.
+Macros (V8-V16) are compiled by the one registry in
+c3dc_etl_spark.macros, which the row-mapped builder reaches through
+``compile_call``; the result is still a Column — lookups become
+literal-map getItem calls (constant-folded, shipped with the plan), never
+per-row Python.
 """
 
 from __future__ import annotations
@@ -30,13 +32,14 @@ from c3dc_etl_spark.functions.columns import (
     nullif_blank,
     split_multi,
 )
-from c3dc_etl_spark.macros import build_macro
+from c3dc_etl_spark.macros import MacroCall, build_macro
 from c3dc_etl_spark.mapping.model import (
     WILDCARD_ALWAYS,
     WILDCARD_NONEMPTY,
     FieldMapping,
     Replacement,
 )
+from c3dc_etl_spark.schema.model import PropDef
 from c3dc_etl_spark.schema.registry import SchemaRegistry
 
 
@@ -54,10 +57,9 @@ class CompilerContext:
 class CompiledField:
     prop: str
     column: Column
-    is_final: bool = False  # macro already produced the schema type (e.g. {race})
     # provably non-blank by construction (e.g. a {uuid} id: a 36-char
     # md5 format over coalesced literals — never null, never ''). Lets
-    # build_node skip the P6 required-field filter for this prop:
+    # union_required skip the P6 required-field filter for this prop:
     # predicate pushdown would otherwise substitute the md5 expression
     # into a Filter node, where (unlike ProjectExec) there is no
     # subexpression elimination, so the hash evaluates ~6x per row for
@@ -100,9 +102,16 @@ def value_expression(
     mapping: FieldMapping, repl: Replacement, ctx: CompilerContext
 ) -> tuple[Column, bool]:
     """Compile one arm's new_value. Returns (column, is_final)."""
-    macro = repl.macro()
-    if macro:
-        return build_macro(macro[0], macro[1], mapping, ctx)
+    name = repl.macro()
+    if name:
+        call = MacroCall(
+            mapping.output_node,
+            mapping.output_prop,
+            mapping.type_group_index,
+            tuple(mapping.source_columns()),
+            mapping.default_value,
+        )
+        return build_macro(name, call, ctx)
     if isinstance(repl.new_value, list):
         return F.array(*[F.lit(str(v)) for v in repl.new_value]), True
     nv = repl.new_value
@@ -158,35 +167,37 @@ def compile_field(mapping: FieldMapping, ctx: CompilerContext) -> CompiledField:
     else:
         value = F.lit(None)
 
-    # a single always-matching {uuid} arm yields a value that can never
-    # be blank (md5-hex 8-4-4-4-12 over coalesced non-null parts) — but
-    # only schema_convert's PLAIN-string path preserves non-blankness.
-    # An enum-constrained prop nulls values outside its PV list, and an
-    # integer/number prop's cast nulls the hex string, so the proof (and
-    # the P6 filter skip it licenses) is gated to plain no-enum strings.
-    never_blank = (
-        len(mapping.replacement_values) == 1
-        and mapping.replacement_values[0].macro() is not None
-        and mapping.replacement_values[0].macro()[0] == "uuid"
-        and mapping.replacement_values[0].old_value == WILDCARD_ALWAYS
-        and prop.type == "string"
-        and not prop.enum
+    repls = mapping.replacement_values
+    bare_uuid = (
+        len(repls) == 1 and repls[0].macro() == "uuid" and repls[0].old_value == WILDCARD_ALWAYS
     )
-    if any_final:
-        return CompiledField(
-            mapping.output_prop, value, is_final=True, never_blank=never_blank
-        )
-    return CompiledField(
-        mapping.output_prop,
-        schema_convert(value, prop),
-        never_blank=never_blank,
-    )
+    return typed_field(prop, value, any_final, bare_uuid)
+
+
+def compile_call(name: str, call: MacroCall, ctx: CompilerContext) -> CompiledField:
+    """One macro call as a whole field value (a row-mapped rule cell)."""
+    value, is_final = build_macro(name, call, ctx)
+    return typed_field(ctx.registry.prop(call.node, call.prop), value, is_final, name == "uuid")
+
+
+def typed_field(
+    prop: PropDef, value: Column, is_final: bool = False, bare_uuid: bool = False
+) -> CompiledField:
+    """``value`` as a schema-typed field. A bare {uuid} value can never
+    be blank (md5-hex 8-4-4-4-12 over coalesced non-null parts) — but
+    only schema_convert's PLAIN-string path preserves non-blankness. An
+    enum-constrained prop nulls values outside its PV list, and an
+    integer/number prop's cast nulls the hex string, so the proof (and
+    the P6 filter skip it licenses) is gated to plain no-enum strings."""
+    never_blank = bare_uuid and prop.type == "string" and not prop.enum
+    if not is_final:
+        value = schema_convert(value, prop)
+    return CompiledField(prop.name, value, never_blank)
 
 
 def schema_convert(value: Column, prop) -> Column:
     """V17-V20 type conversion + V18/V19 enum discipline: raw value ->
-    the schema-typed, enum-case-restored Column. Shared by the mapping
-    compiler and the row-mapped builder."""
+    the schema-typed, enum-case-restored Column."""
     if prop.type == "integer":
         return int_round(value)
     if prop.type == "number":

@@ -15,10 +15,12 @@ import json
 import re
 from dataclasses import dataclass, field
 
+from c3dc_etl_spark.macros import MACROS
+
 WILDCARD_ALWAYS = "*"
 WILDCARD_NONEMPTY = "+"
 
-_MACRO_RE = re.compile(r"^\{(?P<name>[a-z_]+)(?::(?P<arg>[^}]*))?\}$")
+_MACRO_RE = re.compile(r"^\{([a-z_]+)\}$")
 _FIELD_SPLICE_RE = re.compile(r"\{field:([^}]+)\}")
 
 
@@ -29,12 +31,11 @@ class Replacement:
     old_value: str | list[str]  # list for compound-field ordinal matching
     new_value: object  # str, list[str], number, or a "{macro}" string
 
-    def macro(self) -> tuple[str, str | None] | None:
-        if isinstance(self.new_value, str):
-            m = _MACRO_RE.match(self.new_value)
-            if m:
-                return m.group("name"), m.group("arg")
-        return None
+    def macro(self) -> str | None:
+        """The macro name of a whole-value "{name}" (a "{field:NAME}"
+        splice is not a macro)."""
+        m = _MACRO_RE.match(self.new_value) if isinstance(self.new_value, str) else None
+        return m.group(1) if m else None
 
     def field_splices(self) -> list[str]:
         if isinstance(self.new_value, str):
@@ -106,18 +107,6 @@ def load_mappings(doc: list[dict] | str) -> list[FieldMapping]:
     return out
 
 
-KNOWN_MACROS = {
-    "uuid",
-    "sum",
-    "sum_abs_first",
-    "race",
-    "find_enum_value",
-    "diagnosis",
-    "diagnosis_category",
-    "laterality",
-}
-
-
 def mapping_errors(
     mappings: list[FieldMapping],
     *,
@@ -127,7 +116,7 @@ def mapping_errors(
     """Static validation before any job launches (X2; reference
     _get_transformation_mapping_errors etl/ccdi/c3dc_etl.py:678-762):
     output fields exist in the schema, source fields exist in the source
-    header, macros are known, compound old/new arity matches."""
+    header, macros are in the macro registry, compound old/new arity matches."""
     errors: list[str] = []
     for m in mappings:
         qual = f"{m.output_node}.{m.output_prop}"
@@ -143,8 +132,8 @@ def mapping_errors(
         n_src = len(m.source_columns())
         for r in m.replacement_values:
             macro = r.macro()
-            if macro and macro[0] not in KNOWN_MACROS:
-                errors.append(f"{qual}: unknown macro {{{macro[0]}}}")
+            if macro and macro not in MACROS:
+                errors.append(f"{qual}: unknown macro {{{macro}}}")
             if isinstance(r.old_value, str) and ";" in r.old_value and m.is_compound():
                 if len(r.old_value.split(";")) != n_src:
                     errors.append(

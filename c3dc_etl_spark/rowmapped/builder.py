@@ -12,9 +12,11 @@ Engine form: the rule sheet is DRIVER-side data (tens to hundreds of
 rows), so rules compile PLAN-time into a union of filter+select
 projections over the subject frame — no crossJoin, no shuffle at all;
 each rule is a narrow codegen pass, and Catalyst merges the union
-branches into one scan of the source. Predicate compilation reuses the
-mapping compiler's match_predicate; output typing reuses
-schema_convert.
+branches into one scan of the source. This module only parses the
+sheet: predicates compile through the mapping compiler's
+match_predicate, a `{name}` / `{name(args)}` cell through the one macro
+registry (``compile_call``, group tag `rule<index>`), and the union +
+P6 tail is the harmonize builder's ``union_required``.
 """
 
 from __future__ import annotations
@@ -22,25 +24,23 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.functions.columns import (
-    blankish,
-    deterministic_uuid,
-    missing_required,
-)
+from c3dc_etl_spark.harmonize.builder import union_required
+from c3dc_etl_spark.macros import MACROS, MacroCall
 from c3dc_etl_spark.mapping.compiler import (
+    CompiledField,
     CompilerContext,
+    compile_call,
     match_predicate,
-    schema_convert,
+    typed_field,
 )
 
 SOURCE_NAME_COL = "Source Variable Name"
 SOURCE_VALUE_COL = "Source Permissible Values Code"
 
-_CALL_RE = re.compile(r"^\{(?P<name>[a-z_]+)\((?P<args>.*)\)\}$")
-_MACRO_RE = re.compile(r"^\{(?P<name>[a-z_]+)\}$")
+_CALL_RE = re.compile(r"^\{(?P<name>[a-z_]+)(?:\((?P<args>.*)\))?\}$")
 # split args on commas outside quotes
 _ARG_RE = re.compile(r"'[^']*'|[^,]+")
 
@@ -94,16 +94,21 @@ def parse_rule_rows(rows: list[dict], node: str) -> list[RowRule]:
 def rule_errors(rules: list[RowRule], node: str, registry) -> list[str]:
     """X4 static validation (reference :145-193): every rule needs >= 1
     output property; output properties must exist in the node schema;
-    compound value arity must match the source arity."""
+    macro cells must name a registered macro (the one registry the build
+    compiles them through); compound value arity must match the source
+    arity."""
     errors: list[str] = []
     prop_names = {p.name for p in registry.node(node).props}
     for r in rules:
         tag = f"rule#{r.index}"
         if not r.outputs:
             errors.append(f"{tag}: no '{node}.' output columns")
-        for prop in r.outputs:
+        for prop, raw in r.outputs.items():
             if prop not in prop_names:
                 errors.append(f"{tag}: unknown output property {node}.{prop}")
+            call = _parse_call(raw)
+            if call and call[0] not in MACROS:
+                errors.append(f"{tag}: unknown macro {{{call[0]}}} in {node}.{prop}")
         if len(r.sources) > 1 and r.values not in ("*",):
             arity = len(r.values.split(";"))
             if arity != len(r.sources):
@@ -113,62 +118,23 @@ def rule_errors(rules: list[RowRule], node: str, registry) -> list[str]:
     return errors
 
 
-def _parse_call(raw: str) -> tuple[str, list[str]] | None:
+def _parse_call(raw: str) -> tuple[str, tuple[str, ...]] | None:
+    """A `{name}` or `{name(arg, 'literal', ...)}` cell -> (name, args)."""
     m = _CALL_RE.match(raw.strip())
     if not m:
         return None
-    args = [a.strip() for a in _ARG_RE.findall(m.group("args")) if a.strip()]
-    return m.group("name"), args
+    args = _ARG_RE.findall(m.group("args") or "")
+    return m.group("name"), tuple(a.strip() for a in args if a.strip())
 
 
-def _arg_column(arg: str) -> Column:
-    """Macro-call argument: 'quoted' -> numeric/string literal, bare ->
-    source column (the reference AST-parses the same two shapes)."""
-    if arg.startswith("'") and arg.endswith("'"):
-        lit = arg[1:-1]
-        try:
-            return F.lit(float(lit))
-        except ValueError:
-            return F.lit(lit)
-    return F.col(arg).cast("string").try_cast("double")
-
-
-def _rule_value(
-    raw: str, node: str, prop: str, rule: RowRule, ctx: CompilerContext
-) -> tuple[Column, bool]:
-    """Compile one output cell: {uuid}, {sum_abs_first(...)}, {sum(...)},
-    or a literal. Returns (column, already_typed)."""
-    macro = _MACRO_RE.match(raw.strip())
-    if macro and macro.group("name") == "uuid":
-        identity = [F.lit(node), F.lit(f"rule{rule.index}")] + [
-            F.col(c) for c in ctx.row_identity
-        ]
-        return deterministic_uuid(*identity, seed=ctx.uuid_seed), True
+def _rule_field(rule: RowRule, node: str, prop: str, ctx: CompilerContext) -> CompiledField:
+    """One output cell: a macro call or a literal, schema-typed."""
+    raw = rule.outputs[prop]
     call = _parse_call(raw)
-    if call:
-        name, args = call
-        cols = [_arg_column(a) for a in args]
-        if name == "sum_abs_first":
-            total = F.abs(cols[0])
-        elif name == "sum":
-            total = cols[0]
-        else:
-            raise ValueError(f"unknown row-mapped macro call {name!r}")
-        for c in cols[1:]:
-            total = total + c
-        # blank source addends -> null (V10 discipline); literals never blank
-        blanks = [
-            blankish(F.col(a))
-            for a in args
-            if not (a.startswith("'") and a.endswith("'"))
-        ]
-        if blanks:
-            any_blank = blanks[0]
-            for b in blanks[1:]:
-                any_blank = any_blank | b
-            total = F.when(any_blank, F.lit(None).cast("double")).otherwise(total)
-        return total, False
-    return F.lit(raw), False
+    if call is None:
+        return typed_field(ctx.registry.prop(node, prop), F.lit(raw))
+    name, args = call
+    return compile_call(name, MacroCall(node, prop, f"rule{rule.index}", args), ctx)
 
 
 def build_rowmapped_node(
@@ -179,32 +145,15 @@ def build_rowmapped_node(
 ) -> DataFrame:
     """M3: one output record per (subject row, matching rule). Compiled
     as a union of per-rule filter+select plans — every branch reads the
-    same scan (Catalyst reuses it) and runs entirely in codegen."""
-    registry = ctx.registry
-    props = sorted({p for r in rules for p in r.outputs})
-    null_types = {"integer": "bigint", "number": "double", "array": "array<string>"}
-    frames: list[DataFrame] = []
-    for rule in rules:
-        pred = match_predicate(list(rule.sources), rule.values)
-        cols: list[Column] = []
-        for prop in props:
-            if prop in rule.outputs:
-                value, typed = _rule_value(rule.outputs[prop], node, prop, rule, ctx)
-                if not typed:
-                    value = schema_convert(value, registry.prop(node, prop))
-            else:
-                t = null_types.get(registry.prop(node, prop).type, "string")
-                value = F.lit(None).cast(t)
-            cols.append(value.alias(prop))
-        frames.append(source.filter(pred).select(*cols))
-    if not frames:
+    same scan (Catalyst reuses it) and runs entirely in codegen. Columns
+    come out in sorted prop order."""
+    if not rules:
         raise ValueError("no rules to build")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    # P6 required filter, as in the full-node builder
-    for req in registry.required_props(node):
-        if req not in out.columns:
-            continue
-        out = out.filter(~missing_required(req, registry.prop(node, req).type))
-    return out
+    branches = []
+    for rule in rules:
+        fields = [_rule_field(rule, node, prop, ctx) for prop in sorted(rule.outputs)]
+        pred = match_predicate(list(rule.sources), rule.values)
+        cols = [f.column.alias(f.prop) for f in fields]
+        branches.append((source.filter(pred).select(*cols), fields))
+    props = sorted({p for r in rules for p in r.outputs})
+    return union_required(branches, node, ctx.registry).select(*props)

@@ -1365,7 +1365,9 @@ class TableLog:
         touched ones. Every other file survives by name: a batch
         touching 0.1 % of the key space rewrites 0.1 % of the table.
         With nothing touched and no ``incoming`` the commit carries no
-        data but still records ``txn``.
+        data but still records ``txn``. ``incoming`` lands in the table's
+        column order, touched files or not; a batch whose column set is
+        not the table's raises ValueError before anything lands.
 
         Conflicts, checked on every commit retry against the new head:
         a net add since base that ``where`` also picks (a racer's row
@@ -1399,13 +1401,19 @@ class TableLog:
                 )
 
         rows = incoming
-        if touched:
-            kept = keep(self._scan_files(spark, touched, dvm=base_dvm))
-            rows = (
-                kept
-                if incoming is None
-                else kept.unionByName(incoming.select(*kept.columns))
-            )
+        if touched or (incoming is not None and base_snap):
+            existing = self._scan_files(spark, touched or list(base_snap), dvm=base_dvm)
+            if incoming is not None:
+                odd = sorted(set(incoming.columns) ^ set(existing.columns))
+                if odd:
+                    raise ValueError(
+                        f"{action}: batch columns differ from the table's "
+                        f"{existing.columns} in {odd}"
+                    )
+                rows = incoming.select(*existing.columns)
+            if touched:
+                kept = keep(existing)
+                rows = kept if rows is None else kept.unionByName(rows)
         adds = [] if rows is None else self._land_files(rows)
         return self.commit(
             add=adds,
@@ -2153,7 +2161,7 @@ class TableLog:
             target="replaced range",
             action="replace",
             where={"key_between": key_between},
-            keep=lambda existing: existing.filter(outside).select(*df.columns),
+            keep=lambda existing: existing.filter(outside),
             incoming=df,
             txn=txn,
             constraints_epoch=cepoch,

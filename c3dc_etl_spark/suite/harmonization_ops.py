@@ -197,7 +197,7 @@ def int_round_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("harmonize", "expr"),
 )
 def numeric_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V21: non-numeric -> null (+warn) instead of error for numeric
+    """V21: non-numeric -> null instead of error for numeric
     fields (reference etl/target/c3dc_etl.py:1330-1344, is_number
     etl/ccdi/c3dc_etl.py:151-158). try_cast keeps this semantics even
     under an ANSI-enabled session."""

@@ -204,7 +204,7 @@ def test_load_mappings_parses_structure():
     assert maps[0].source_sheet() == "tab"
     assert maps[0].source_columns() == ["col"]
     assert maps[1].is_compound() and maps[1].source_columns() == ["r", "e"]
-    assert maps[1].replacement_values[0].macro() == ("race", None)
+    assert maps[1].replacement_values[0].macro() == "race"
 
 
 def test_mapping_errors_catches_bad_refs():
@@ -232,6 +232,21 @@ def test_mapping_errors_clean_mapping_passes():
         [{"output_field": "participant.participant_id", "source_field": "c1"}]
     )
     assert mapping_errors(maps, schema_props=props, source_columns={"c1"}) == []
+
+
+def test_whole_value_field_splice_is_not_a_macro(spark):
+    """A new_value that is exactly "{field:NAME}" splices that column,
+    as the "v{field:NAME}" template form does — it is not a macro named
+    'field': it passes static validation and compiles to the column's
+    value."""
+    props = {n: {p.name for p in REG.node(n).props} for n in REG.node_names}
+    maps = load_mappings(
+        [{"output_field": "participant.participant_id", "source_field": "c1",
+          "replacement_values": [{"old_value": "*", "new_value": "{field:c2}"}]}]
+    )
+    assert mapping_errors(maps, schema_props=props, source_columns={"c1", "c2"}) == []
+    df = spark.createDataFrame([("a", "x1"), ("b", "x2")], "c1 string, c2 string")
+    assert _eval(spark, df, compile_field(maps[0], _ctx()).column) == ["x1", "x2"]
 
 
 # -- sub_record_explode (M2) + build_node (P6) -----------------------------

@@ -17,9 +17,9 @@ def _ctx():
 
 def test_parse_call_args():
     assert _parse_call("{sum_abs_first(a, b, '100')}") == (
-        "sum_abs_first", ["a", "b", "'100'"]
+        "sum_abs_first", ("a", "b", "'100'")
     )
-    assert _parse_call("{uuid}") is None  # bare macro, not a call
+    assert _parse_call("{uuid}") == ("uuid", ())  # bare macro: a call with no args
     assert _parse_call("literal") is None
 
 
@@ -41,12 +41,18 @@ def test_rule_errors_x4():
         {"Source Variable Name": "f1", "Source Permissible Values Code": "x"},
         {"Source Variable Name": "[f1, f2]", "Source Permissible Values Code": "a",
          "treatment.not_a_prop": "y"},
+        # checked against the macro registry the build compiles through
+        {"Source Variable Name": "f1", "Source Permissible Values Code": "x",
+         "treatment.treatment_id": "{bogus}",
+         "treatment.age_at_treatment_start": "{sum_abs_first(a, '5')}"},
     ]
     rules = parse_rule_rows(rows, "treatment")
     errs = "\n".join(rule_errors(rules, "treatment", REG))
     assert "no 'treatment.' output columns" in errs
     assert "unknown output property" in errs
     assert "value arity 1 != 2" in errs
+    assert "rule#2: unknown macro {bogus}" in errs
+    assert "sum_abs_first" not in errs
 
 
 def test_build_rowmapped_matching_and_macros(spark):
@@ -82,3 +88,28 @@ def test_build_rowmapped_matching_and_macros(spark):
     assert len(set(ids)) == len(ids)
     out2 = build_rowmapped_node(df, "treatment", rules, _ctx()).collect()
     assert sorted(ids) == sorted(r["treatment_id"] for r in out2)
+
+
+def test_rowmapped_uuid_id_skips_required_filter(spark):
+    """Row-mapped nodes share the mapped nodes' union + P6 tail: a
+    {uuid} id in every rule is provably non-blank, so its required
+    filter is skipped and no Filter in the executed plan evaluates the
+    md5 hash (a Filter, unlike a Project, has no subexpression
+    elimination)."""
+    from pyspark.sql import functions as F
+
+    from perfbench.workloads import STUDY_RULES
+
+    rules = parse_rule_rows(STUDY_RULES, "treatment")
+    src = spark.range(6).select(
+        F.col("id").alias("source_file_row_num"),
+        F.when(F.col("id") % 2 == 0, "Yes").otherwise("no").alias("chemo"),
+        (F.col("id") - 10).cast("string").alias("tx_age"),
+    )
+    ctx = CompilerContext(registry=REG, uuid_seed="t")
+    out = build_rowmapped_node(src, "treatment", rules, ctx)
+    rows = out.collect()
+    assert len(rows) == 3 and all(len(r["treatment_id"]) == 36 for r in rows)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    filters = [line for line in plan.splitlines() if "Filter" in line]
+    assert filters and not [line for line in filters if "md5" in line]
