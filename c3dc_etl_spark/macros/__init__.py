@@ -58,14 +58,28 @@ class MacroCall:
 MacroBuilder = Callable[[MacroCall, "CompilerContext"], tuple[Column, bool]]
 
 MACROS: dict[str, MacroBuilder] = {}
+# the fewest ``call.args`` each builder indexes
+MACRO_MIN_ARGS: dict[str, int] = {}
 
 
-def macro(name: str):
+def macro(name: str, min_args: int = 0):
     def deco(fn: MacroBuilder) -> MacroBuilder:
         MACROS[name] = fn
+        MACRO_MIN_ARGS[name] = min_args
         return fn
 
     return deco
+
+
+def call_error(name: str, n_args: int) -> str | None:
+    """Static check of one call, before any job runs: the macro is
+    registered and gets at least the arguments its builder reads."""
+    if name not in MACROS:
+        return f"unknown macro {{{name}}}"
+    need = MACRO_MIN_ARGS[name]
+    if n_args < need:
+        return f"macro {{{name}}} needs {need} argument(s), got {n_args}"
+    return None
 
 
 def build_macro(name: str, call: MacroCall, ctx: "CompilerContext") -> tuple[Column, bool]:
@@ -126,12 +140,12 @@ def _horizontal_sum(abs_first: bool) -> MacroBuilder:
     return build
 
 
-macro("sum")(_horizontal_sum(abs_first=False))
-macro("sum_abs_first")(_horizontal_sum(abs_first=True))
+macro("sum", min_args=1)(_horizontal_sum(abs_first=False))
+macro("sum_abs_first", min_args=1)(_horizontal_sum(abs_first=True))
 
 
 # V12 {race}: merge compound [race, ethnicity] into a sorted enum array
-@macro("race")
+@macro("race", min_args=2)
 def _race(call, ctx):
     pvs = ctx.registry.enum_values(call.node, call.prop)
     return race_merge(F.col(call.args[0]), F.col(call.args[1]), pvs), True
@@ -140,7 +154,7 @@ def _race(call, ctx):
 # V13 {find_enum_value}: source is a code ('8000/0', 'C71.9'); emit the PV
 # whose 'CODE : TERM' prefix matches; miss -> null -> the coalesce chain
 # falls through to the next arm (etl/target/c3dc_etl.py:1024-1033,1113-1118)
-@macro("find_enum_value")
+@macro("find_enum_value", min_args=1)
 def _find_enum_value(call, ctx):
     code_map = ctx.registry.enum_code_map(call.node, call.prop)
     return _lookup_map(code_map)[norm(F.col(call.args[0]))], True
@@ -148,7 +162,7 @@ def _find_enum_value(call, ctx):
 
 # V14 {diagnosis} (MCI): ICD-O code -> term -> diagnosis PV via the
 # broadcast icdo lookup (etl/mci/c3dc_etl.py:1540-1561)
-@macro("diagnosis")
+@macro("diagnosis", min_args=1)
 def _diagnosis(call, ctx):
     code_pv = ctx.registry.enum_code_map(call.node, call.prop)
     pvs = ctx.registry.enum_values(call.node, call.prop)
@@ -166,7 +180,7 @@ def _diagnosis(call, ctx):
 
 
 # V15 {diagnosis_category} (MCI): {diagnosis} then diagnosis -> category
-@macro("diagnosis_category")
+@macro("diagnosis_category", min_args=1)
 def _diagnosis_category(call, ctx):
     cat = {k.casefold(): v for k, v in ctx.lookups.get("diagnosis_category", {}).items()}
     return _lookup_map(cat)[norm(F.col(call.args[0]))], True
@@ -175,7 +189,7 @@ def _diagnosis_category(call, ctx):
 # V16 {laterality} (MCI): first non-empty of N source fields that
 # case-matches the enum (etl/mci/c3dc_etl.py:1647-1686); the >1-populated
 # assertion is a validate-layer check, not per-row control flow
-@macro("laterality")
+@macro("laterality", min_args=1)
 def _laterality(call, ctx):
     pvs = ctx.registry.enum_values(call.node, call.prop)
     pv_map = _lookup_map({pv.casefold(): pv for pv in pvs})

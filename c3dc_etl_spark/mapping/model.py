@@ -15,7 +15,7 @@ import json
 import re
 from dataclasses import dataclass, field
 
-from c3dc_etl_spark.macros import MACROS
+from c3dc_etl_spark.macros import call_error
 
 WILDCARD_ALWAYS = "*"
 WILDCARD_NONEMPTY = "+"
@@ -116,7 +116,8 @@ def mapping_errors(
     """Static validation before any job launches (X2; reference
     _get_transformation_mapping_errors etl/ccdi/c3dc_etl.py:678-762):
     output fields exist in the schema, source fields exist in the source
-    header, macros are in the macro registry, compound old/new arity matches."""
+    header, macros are in the macro registry and get the source columns
+    their builder reads, compound old/new arity matches."""
     errors: list[str] = []
     for m in mappings:
         qual = f"{m.output_node}.{m.output_prop}"
@@ -132,8 +133,9 @@ def mapping_errors(
         n_src = len(m.source_columns())
         for r in m.replacement_values:
             macro = r.macro()
-            if macro and macro not in MACROS:
-                errors.append(f"{qual}: unknown macro {{{macro}}}")
+            error = call_error(macro, n_src) if macro else None
+            if error:
+                errors.append(f"{qual}: {error}")
             if isinstance(r.old_value, str) and ";" in r.old_value and m.is_compound():
                 if len(r.old_value.split(";")) != n_src:
                     errors.append(

@@ -5,6 +5,12 @@ iterates transformations in order, keeping the first record per
 fingerprint cache key — an O(N^2) driver loop. Engine form: union all
 transformations with an ordinal column, ONE window over the
 (fingerprint, participant) hash partitioning, row_number() == 1.
+
+The reference builds that merged list once and its validation and save
+both read it. Here the merge is materialized once, too: the call runs
+the union, fingerprint and window in one job and returns a frame over
+the stored blocks, so reconciliation, link wiring, violation counts and
+the write read the result instead of re-running the merge lineage.
 """
 
 from __future__ import annotations
@@ -34,7 +40,16 @@ def first_wins_merge(
     reference's cache key is (hash, participant_id, node), so pass
     ``key_cols=('participant_id',)``-style columns where the frame has
     them. Ties inside one transformation resolve by the node id for
-    determinism. Adds ``fingerprint`` and ``won_ord`` columns."""
+    determinism. Adds ``fingerprint`` and ``won_ord`` columns.
+
+    Eager: the call runs one job, ``localCheckpoint(eager=True)`` (AQE
+    submits its one shuffle, the window's, as a stage of its own), and
+    returns a frame over the stored blocks. The blocks live as long
+    as the returned frame: the checkpoint is an RDD persist that Spark's
+    ContextCleaner frees once the frame is unreachable, so there is
+    nothing to release (it is not a ``pinning.pin``). A local checkpoint
+    does not survive executor loss; the engine's sessions are
+    ``local[N]`` (``session.get_spark``), as for ``operators/graph.py``."""
     tagged = [df.withColumn(ORD_COL, F.lit(i + 1)) for i, df in enumerate(frames)]
     unioned = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     fp = canonical_fingerprint(
@@ -51,6 +66,7 @@ def first_wins_merge(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
         .withColumnRenamed(ORD_COL, "won_ord")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -65,7 +81,8 @@ def reconciliation_counts(
     """D6: distinct-fingerprint cardinality check — the merged output
     must carry exactly the distinct content of the unmerged inputs
     (reference _validate_merged_harmonized_data,
-    etl/target/c3dc_etl.py:1817-1924). One lazy job, two aggregates."""
+    etl/target/c3dc_etl.py:1817-1924). One lazy job, two aggregates; the
+    merged side reads ``first_wins_merge``'s stored blocks."""
     unioned = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), unmerged_frames
     )

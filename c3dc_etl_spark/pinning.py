@@ -8,6 +8,10 @@ the pinned blocks would accumulate until LRU eviction churns.
 
 Every such persist goes through :func:`pin`, which registers the frame
 here; consumers call :func:`release_pinned` AFTER materializing a query.
+The one exception is an eager ``localCheckpoint`` whose blocks live as
+long as the returned frame (``merge.first_wins_merge``,
+``operators/graph.py``): Spark's ContextCleaner frees them once the frame
+is unreachable, so nothing registers or releases them here.
 The suite wires this automatically: each registered query releases the
 previous query's pins on entry (see ``suite.registry.query``), and
 ``bench.py`` releases after every collect. Releasing a REGISTERED pin is

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from c3dc_etl_spark.harmonize.builder import union_required
-from c3dc_etl_spark.macros import MACROS, MacroCall
+from c3dc_etl_spark.macros import MacroCall, call_error
 from c3dc_etl_spark.mapping.compiler import (
     CompiledField,
     CompilerContext,
@@ -95,8 +95,8 @@ def rule_errors(rules: list[RowRule], node: str, registry) -> list[str]:
     """X4 static validation (reference :145-193): every rule needs >= 1
     output property; output properties must exist in the node schema;
     macro cells must name a registered macro (the one registry the build
-    compiles them through); compound value arity must match the source
-    arity."""
+    compiles them through) with the arguments its builder reads; compound
+    value arity must match the source arity."""
     errors: list[str] = []
     prop_names = {p.name for p in registry.node(node).props}
     for r in rules:
@@ -107,8 +107,9 @@ def rule_errors(rules: list[RowRule], node: str, registry) -> list[str]:
             if prop not in prop_names:
                 errors.append(f"{tag}: unknown output property {node}.{prop}")
             call = _parse_call(raw)
-            if call and call[0] not in MACROS:
-                errors.append(f"{tag}: unknown macro {{{call[0]}}} in {node}.{prop}")
+            error = call_error(call[0], len(call[1])) if call else None
+            if error:
+                errors.append(f"{tag}: {error} in {node}.{prop}")
         if len(r.sources) > 1 and r.values not in ("*",):
             arity = len(r.values.split(";"))
             if arity != len(r.sources):

@@ -20,16 +20,6 @@ from c3dc_etl_spark.sources.rownum import with_row_numbers
 from c3dc_etl_spark.sources.storage import normalize_path
 
 
-def _raw_header(spark: SparkSession, path: str, sep: str) -> list[str]:
-    """First physical line of the (first) file — needed because Spark
-    renames blank header cells to `_cN`, losing the blankness the S3
-    prune keys on."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return first[0][0].split(sep)
-
-
 def read_delimited(
     spark: SparkSession,
     path: str,
@@ -42,7 +32,12 @@ def read_delimited(
 ) -> DataFrame:
     """Load a delimited file as an untyped (all-string) DataFrame.
 
-    - ``prune_headerless``: drop columns whose header cell is blank (S3);
+    - ``prune_headerless``: drop columns whose header cell is blank (S3),
+      read off Spark's own parsed header, so quoting and leading blank
+      lines parse as the data does: Spark names a blank cell ``_c<i>``
+      (i = its position) and keeps a whitespace-only one as is. A header
+      that literally reads ``_c<i>`` at position i looks the same and is
+      dropped too;
     - ``id_column``: drop rows where this column is blank (P1);
     - ``row_numbers``: add `source_file_row_num` starting at
       ``rownum_start`` (P3; 2 = first data line of a headered file),
@@ -54,13 +49,7 @@ def read_delimited(
     path = normalize_path(path)
     df = spark.read.option("header", True).option("sep", sep).csv(path)
     if prune_headerless:
-        header = _raw_header(spark, path, sep)
-        keep = [
-            df.columns[i]
-            for i in range(len(df.columns))
-            if i >= len(header) or header[i].strip()
-        ]
-        df = df.select(*keep)
+        df = df.select(*[c for i, c in enumerate(df.columns) if c.strip() and c != f"_c{i}"])
     if id_column:
         df = df.filter(~blankish(F.col(id_column)))
     if row_numbers:

@@ -153,6 +153,25 @@ def responses_without_treatment(
     )
 
 
+def _inline_refs(schema: dict) -> dict:
+    """A copy of a generated bundle with each ``{"$ref": "#/$defs/<n>"}``
+    replaced by its ``$defs`` entry (the bundle has no recursive refs).
+    It validates as the bundle does, without a ref lookup per record."""
+    defs = schema.get("$defs", {})
+
+    def inline(node):
+        if isinstance(node, dict):
+            ref = node.get("$ref")
+            if len(node) == 1 and isinstance(ref, str) and ref.startswith("#/$defs/"):
+                return inline(defs[ref.removeprefix("#/$defs/")])
+            return {k: inline(v) for k, v in node.items() if k != "$defs"}
+        if isinstance(node, list):
+            return [inline(v) for v in node]
+        return node
+
+    return inline(schema)
+
+
 def document_errors(doc: dict, registry: SchemaRegistry | None = None) -> list[str]:
     """Driver-side X1 against the generated draft-2020-12 schema; returns
     '<json_path>: <message>' strings (empty = valid), like the
@@ -160,8 +179,7 @@ def document_errors(doc: dict, registry: SchemaRegistry | None = None) -> list[s
     import jsonschema
 
     registry = registry or SchemaRegistry()
-    schema = registry.to_json_schema()
-    validator = jsonschema.Draft202012Validator(schema)
+    validator = jsonschema.Draft202012Validator(_inline_refs(registry.to_json_schema()))
     return [
         f"{e.json_path}: {e.message}"
         for e in sorted(validator.iter_errors(doc), key=lambda e: e.json_path)

@@ -215,6 +215,9 @@ def test_mapping_errors_catches_bad_refs():
             {"output_field": "participant.sex_at_birth", "source_field": "missing_col"},
             {"output_field": "participant.sex_at_birth", "source_field": "c1",
              "replacement_values": [{"old_value": "*", "new_value": "{bogus}"}]},
+            # {race} merges two source columns
+            {"output_field": "participant.race", "source_field": "c1",
+             "replacement_values": [{"old_value": "*", "new_value": "{race}"}]},
         ]
     )
     props = {n: {p.name for p in REG.node(n).props} for n in REG.node_names}
@@ -224,6 +227,7 @@ def test_mapping_errors_catches_bad_refs():
     assert "unknown output node" in text
     assert "not in source header" in text
     assert "unknown macro" in text
+    assert "participant.race: macro {race} needs 2 argument(s), got 1" in errs
 
 
 def test_mapping_errors_clean_mapping_passes():

@@ -45,14 +45,21 @@ def test_rule_errors_x4():
         {"Source Variable Name": "f1", "Source Permissible Values Code": "x",
          "treatment.treatment_id": "{bogus}",
          "treatment.age_at_treatment_start": "{sum_abs_first(a, '5')}"},
+        # and called with the arguments its builder reads
+        {"Source Variable Name": "f1", "Source Permissible Values Code": "z",
+         "treatment.age_at_treatment_start": "{sum_abs_first}"},
     ]
     rules = parse_rule_rows(rows, "treatment")
-    errs = "\n".join(rule_errors(rules, "treatment", REG))
-    assert "no 'treatment.' output columns" in errs
-    assert "unknown output property" in errs
-    assert "value arity 1 != 2" in errs
-    assert "rule#2: unknown macro {bogus}" in errs
-    assert "sum_abs_first" not in errs
+    errs = rule_errors(rules, "treatment", REG)
+    text = "\n".join(errs)
+    assert "no 'treatment.' output columns" in text
+    assert "unknown output property" in text
+    assert "value arity 1 != 2" in text
+    assert "rule#2: unknown macro {bogus}" in text
+    assert [e for e in errs if "sum_abs_first" in e] == [
+        "rule#3: macro {sum_abs_first} needs 1 argument(s), got 0"
+        " in treatment.age_at_treatment_start"
+    ]
 
 
 def test_build_rowmapped_matching_and_macros(spark):

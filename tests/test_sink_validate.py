@@ -98,6 +98,47 @@ def test_invalid_record_fails_validation(built_doc):
     assert "made_up_field" in text                  # additionalProperties: false
 
 
+def test_document_errors_match_the_ref_form_schema():
+    """document_errors validates against the bundle with its $refs
+    inlined; the errors, and their order, are those of the bundle as
+    saved: wrong types, enums, missing required properties, extra
+    properties, a wrong top-level shape, and one record with several
+    errors at one path (kept in iter_errors order)."""
+    import jsonschema
+
+    dx = "8000/3 : Neoplasm, malignant"
+    doc = {
+        "participants": [
+            {"participant_id": "p1", "sex_at_birth": "Female", "race": ["Asian"]},
+            {"participant_id": 7, "sex_at_birth": "Not A Sex"},
+            {"sex_at_birth": "Male", "race": "Asian", "made_up": 1, "other": None},
+            {"participant_id": "p4", "race": ["Martian", "Martian"]},
+        ],
+        "diagnoses": [
+            {"diagnosis_id": "d1", "diagnosis": dx, "tumor_classification": "Primary",
+             "age_at_diagnosis": 10.5, "participant.participant_id": "p1"},
+            {"diagnosis_id": "d2", "diagnosis": "nope", "age_at_diagnosis": 99999,
+             "anatomic_site": ["C71.9 : Brain, NOS", 3]},
+            "not a record",
+        ],
+        "survivals": {},
+        "not_a_node": [],
+    }
+    schema = REG.to_json_schema()
+    ref_form = jsonschema.Draft202012Validator(schema)
+    want = [
+        f"{e.json_path}: {e.message}"
+        for e in sorted(ref_form.iter_errors(doc), key=lambda e: e.json_path)
+    ]
+    got = document_errors(doc, REG)
+    assert got == want
+    assert len(got) >= 15
+    at_p3 = [e for e in got if e.startswith("$.participants[2]: ")]
+    assert len(at_p3) >= 2  # missing participant_id, extra properties
+    assert document_errors({"participants": doc["participants"][:1]}, REG) == []
+    assert REG.to_json_schema() == schema  # the bundle itself is unchanged
+
+
 def test_frame_violations_clean_on_built_nodes(built_doc):
     frames, _ = built_doc
     assert frame_violations(frames["diagnosis"], "diagnosis", REG).count() == 0

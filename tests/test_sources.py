@@ -26,18 +26,44 @@ from c3dc_etl_spark.sources.workbook import truncate_sheet_name
 FIXTURES = pathlib.Path(__file__).resolve().parent / "fixtures"
 
 
-def test_delimited_scan_prunes_filters_numbers(spark):
-    df = read_delimited(
-        spark, str(FIXTURES / "clinical.tsv"), sep="\t",
-        id_column="id", row_numbers=True,
-    )
-    rows = {r["id"]: r for r in df.collect()}
-    assert set(df.columns) == {"id", "name", "dose", "source_file_row_num"}  # S3 prune
-    assert set(rows) == {"101", "102", "104", "105"}  # P1 blank-id dropped
-    # P3: contiguous scan-order numbering starting at 2, unaffected by
-    # the dropped row
-    assert [rows[k]["source_file_row_num"] for k in ("101", "102", "104", "105")] == [2, 3, 4, 5]
-    assert rows["104"]["dose"] is None  # untyped cells, empty -> null
+_CLINICAL_ROWS = [
+    ("101", "alpha", "1.5", "junk1"),
+    ("102", "beta", "2.0", "junk2"),
+    ("", "missing", "9.9", "junk3"),
+    ("104", "gamma", "", "junk4"),
+    ("105", "delta", "4.25", "junk5"),
+]
+
+
+def test_delimited_scan_prunes_filters_numbers(spark, tmp_path):
+    """The fixture, plus its rows under two headers the S3 prune must
+    read as Spark parses them: a leading blank line (and a
+    whitespace-only cell), and a quoted cell holding the separator
+    followed by a blank cell."""
+    leading_blank = tmp_path / "leading_blank.csv"
+    lines = ["", "id,name,dose, "] + [",".join(r) for r in _CLINICAL_ROWS]
+    leading_blank.write_text("\n".join(lines) + "\n")
+    quoted = tmp_path / "quoted.csv"
+    lines = ['"last, first",,id,dose'] + [
+        f'"{name}, x",{junk},{id_},{dose}' for id_, name, dose, junk in _CLINICAL_ROWS
+    ]
+    quoted.write_text("\n".join(lines) + "\n")
+    cases = [
+        (FIXTURES / "clinical.tsv", "\t", {"id", "name", "dose"}),
+        (leading_blank, ",", {"id", "name", "dose"}),
+        (quoted, ",", {"last, first", "id", "dose"}),
+    ]
+    for path, sep, kept in cases:
+        df = read_delimited(spark, str(path), sep=sep, id_column="id", row_numbers=True)
+        rows = {r["id"]: r for r in df.collect()}
+        assert set(df.columns) == kept | {"source_file_row_num"}, path  # S3 prune
+        assert set(rows) == {"101", "102", "104", "105"}  # P1 blank-id dropped
+        # P3: contiguous scan-order numbering starting at 2, unaffected by
+        # the dropped row
+        assert [rows[k]["source_file_row_num"] for k in ("101", "102", "104", "105")] == [
+            2, 3, 4, 5
+        ]
+        assert rows["104"]["dose"] is None  # untyped cells, empty -> null
 
 
 @contextmanager
