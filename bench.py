@@ -552,14 +552,12 @@ def main() -> int:
         # silently shrink the reported suite wall
         raise SystemExit(f"bench queries missing from registry: {missing}")
 
-    from c3dc_etl_spark.pinning import release_pinned
-
     def _timed_collect(fn) -> float:
+        # the wall includes the build: shared intermediates are eager
+        # local checkpoints, materialized inside fn and freed with the
+        # frame, so nothing carries over from one run to the next
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
-        # persist hygiene: drop the query's pinned intermediates now
-        # that the result is materialized — nothing lingers
-        release_pinned()
         return round(time.perf_counter() - t0, 3)
 
     # calibration (VERDICT r10 ask #1a): median-of-3 collects of the
@@ -587,13 +585,11 @@ def main() -> int:
         # range_join_events 4.4x ghost — 5.9 s cold vs 0.77 s warm on
         # unchanged code). Timed passes below measure steady state.
         fn(spark, sf_dir).toArrow()
-        release_pinned()
         # pass 1 — compute (Arrow materialization): comparable across
         # rounds and against scale_check's bases; isolates the plan from
         # driver-side row-object GC variance
         t0 = time.perf_counter()
         fn(spark, sf_dir).toArrow()
-        release_pinned()
         compute[name] = round(time.perf_counter() - t0, 3)
         c_total += compute[name]
         # passes 2-4 — warm collects, MEDIAN reported (VERDICT r10 ask
@@ -617,10 +613,8 @@ def main() -> int:
     for name in ROTATION:
         fn = qs[name]
         fn(spark, sf_dir).toArrow()
-        release_pinned()
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
-        release_pinned()
         dt = round(time.perf_counter() - t0, 3)
         rot_times[name] = dt
         rot_total += dt
@@ -680,11 +674,9 @@ def main() -> int:
                 fn = CUSTOM_SCALE.get(name, qs.get(name))
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).toArrow()
-                release_pinned()
                 b_times[name] = round(time.perf_counter() - t0, 3)
                 t0 = time.perf_counter()
                 fn(spark, scale_dir).toArrow()
-                release_pinned()
                 dt = round(time.perf_counter() - t0, 3)
                 s_times[name] = dt
                 if b_times[name]:

@@ -52,25 +52,18 @@ def latest_survival(
         F.when(is_dead, F.lit(0)).otherwise(age).desc(),
         F.when(is_dead, F.lit(0)).otherwise(F.col(order_col)).desc(),
     )
-    picked = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    ranked = df.withColumn("__rn", F.row_number().over(w))
     if drop_inconsistent:
+        # one flag per participant on the same partitioning: the oldest
+        # non-Dead age exceeds the oldest Dead age (null when either
+        # side is empty, which keeps the participant)
         per_part = Window.partitionBy(participant_col)
-        flagged = df.withColumn(
-            "__max_dead_age", F.max(F.when(is_dead, age)).over(per_part)
-        ).withColumn(
+        ranked = ranked.withColumn(
             "__bad",
-            F.max(
-                F.when(
-                    (~is_dead)
-                    & (F.col("__max_dead_age").isNotNull())
-                    & (age > F.col("__max_dead_age")),
-                    1,
-                ).otherwise(0)
-            ).over(per_part),
-        )
-        bad_ids = flagged.filter(F.col("__bad") == 1).select(participant_col).distinct()
-        picked = picked.join(F.broadcast(bad_ids), participant_col, "left_anti")
-    return picked
+            F.max(F.when(~is_dead, age)).over(per_part)
+            > F.max(F.when(is_dead, age)).over(per_part),
+        ).filter(~F.coalesce(F.col("__bad"), F.lit(False))).drop("__bad")
+    return ranked.filter(F.col("__rn") == 1).drop("__rn")
 
 
 def primary_follow_up(

@@ -47,9 +47,9 @@ def first_wins_merge(
     returns a frame over the stored blocks. The blocks live as long
     as the returned frame: the checkpoint is an RDD persist that Spark's
     ContextCleaner frees once the frame is unreachable, so there is
-    nothing to release (it is not a ``pinning.pin``). A local checkpoint
-    does not survive executor loss; the engine's sessions are
-    ``local[N]`` (``session.get_spark``), as for ``operators/graph.py``."""
+    nothing to release (every shared intermediate in the engine has
+    this lifetime). A local checkpoint does not survive executor loss;
+    the engine's sessions are ``local[N]`` (``session.get_spark``)."""
     tagged = [df.withColumn(ORD_COL, F.lit(i + 1)) for i, df in enumerate(frames)]
     unioned = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     fp = canonical_fingerprint(

@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from c3dc_etl_spark import sizing
-from c3dc_etl_spark.pinning import pin
 
 _WARNED_RDD_FALLBACK = False
 
@@ -278,13 +277,12 @@ def minhash_lsh_candidates(
     )
     sig = hv.select("doc", minhash_from_hashes(F.col("hv"), num_hashes).alias("sig"))
     # The sig subtree feeds three consumers (band explode + both rejoin
-    # sides): persist the ~140 byte/doc signature table so the corpus is
-    # read + digested ONCE (column pruning rewrites each consumer's
+    # sides): checkpoint the ~140 byte/doc signature table so the corpus
+    # is read + digested ONCE (column pruning rewrites each consumer's
     # subplan differently, which defeats plain exchange reuse —
-    # measured as a full signature recompute per consumer). pin()
-    # registers the block for release_pinned() once the caller has
-    # materialized the result (persist hygiene in long-lived sessions).
-    sig = pin(sig)
+    # measured as a full signature recompute per consumer). The blocks
+    # live as long as the returned frame (ContextCleaner frees them).
+    sig = sig.localCheckpoint(eager=True)
     banded = sig.select(
         "doc", F.explode(lsh_bands(F.col("sig"), bands, rows_per_band)).alias("band")
     )
@@ -353,12 +351,11 @@ def _shingle_cooccurrence(
     # co-occurrence explode, the size table). Exchange reuse alone does
     # not protect them: column pruning rewrites each consumer's
     # exchange child differently, so the shingle+digest pass re-ran per
-    # consumer (~3x the query cost, measured). persist()
-    # (memory-and-disk) materializes the ~2 KB/doc projection once —
-    # the standard treatment for an expensive multi-consumer
-    # intermediate, and disk-spillable at corpus scale. pin() registers
-    # the block for release_pinned() after the caller materializes.
-    hashed = pin(hashed)
+    # consumer (~3x the query cost, measured). An eager local
+    # checkpoint (memory-and-disk) materializes the ~2 KB/doc
+    # projection once — disk-spillable at corpus scale, freed once the
+    # returned frame is unreachable.
+    hashed = hashed.localCheckpoint(eager=True)
     buckets = hashed.select(
         "doc",
         F.explode(
@@ -643,11 +640,11 @@ def incremental_lsh_candidates(
         "__new",
         F.transform(shingles_of_norm(F.col("__norm"), shingle_k), hash32).alias("hv"),
     )
-    sig = pin(
+    sig = (
         hv.select(
             "doc", "__new", minhash_from_hashes(F.col("hv"), num_hashes).alias("sig")
         )
-    )
+    ).localCheckpoint(eager=True)
     banded = sig.select(
         "doc",
         "__new",
@@ -754,15 +751,15 @@ def prefix_filter_jaccard_join(
     from c3dc_etl_spark.operators.text import lower_tokens
 
     num, den = threshold_num, threshold_den
-    # pinned: toks feeds the ranking, the prefix table, the two
+    # checkpointed: toks feeds the ranking, the prefix table, the two
     # verification probes, and the size table — five consumers; without
-    # the pin each re-scans and re-tokenizes the full corpus.
-    toks = pin(
+    # the checkpoint each re-scans and re-tokenizes the full corpus.
+    toks = (
         df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(F.array_distinct(lower_tokens(text_col))).alias("token"),
         )
-    )
+    ).localCheckpoint(eager=True)
     rank = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -872,13 +869,13 @@ def edit_distance_join(
             f" i -> substring(__padded, i, {q}))"
         )
     )
-    toks = pin(
+    toks = (
         df.select(
             F.col(id_col).alias("doc_id"),
             F.length(text_col).alias("len"),
             padded.alias("__padded"),
         ).select("doc_id", "len", F.explode(grams).alias("gram"))
-    )
+    ).localCheckpoint(eager=True)
     rank = (
         toks.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -1025,17 +1022,17 @@ def exact_substring_spans(
         )
 
     # pass 1: duplicated HASHES — the shuffle carries 8 bytes/position.
-    # pin(): the set is consumed twice (the sizing count + the filter
+    # checkpointed: the set is consumed twice (the sizing count + the filter
     # join); 8-byte rows, disk-spillable, never the corpus.
-    dup_h = pin(
+    dup_h = (
         _grams(docs)
         .groupBy(F.xxhash64("gram").alias("h"))
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("h")
-    )
+    ).localCheckpoint(eager=True)
     # pass 2: size-adaptive (see docstring). ONE bounded count job on
-    # the pinned 8-byte hash set makes the strategy decision explicit
+    # the checkpointed 8-byte hash set makes the strategy decision explicit
     # and driver-side instead of leaving it to AQE size estimates.
     if dup_h.count() * 40 <= sizing.broadcast_budget_bytes(df.sparkSession):
         # FAST: the hint is honored unconditionally, so the gram
@@ -1059,13 +1056,13 @@ def exact_substring_spans(
             "p",
             F.expr(f"substring(__t, p + 1, {L})").alias("gram_c"),
         )
-    # pin(): cand feeds BOTH the confirm aggregate and the hits join —
-    # unpinned, each consumer re-runs the full gram scan (+ the text
-    # join on the narrow path; measured 7.3s vs 3.9s at x5); pinned,
+    # checkpointed: cand feeds BOTH the confirm aggregate and the hits
+    # join — otherwise each consumer re-runs the full gram scan (+ the
+    # text join on the narrow path; measured 7.3s vs 3.9s at x5); here
     # the whole query does TWO gram passes over the corpus, and the
     # cached set is only the hash-duplicated candidates
     # (disk-spillable, proportional to dup volume, never the corpus).
-    cand = pin(cand)
+    cand = cand.localCheckpoint(eager=True)
     dup_g = (
         cand.groupBy("gram_c")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -384,26 +384,25 @@ def pagerank(
 
     Returns (node, rank_x1e12): picounit ranks summing to ~10^12.
     """
-    from c3dc_etl_spark.pinning import pin
-
     one = 10**12
     teleport = ((100 - damping_pct) * one) // (100 * n_nodes)
-    # pin the static frames: every iteration consumes them, and without
-    # the pin the lazy lineage recomputes the edge derivation (often a
-    # join + distinct over fact tables) once per iteration
-    nodes = pin(
+    # checkpoint the static frames: every iteration consumes them, and
+    # without the checkpoint the lazy lineage recomputes the edge
+    # derivation (often a join + distinct over fact tables) once per
+    # iteration
+    nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     outdeg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    e = pin(
+    e = (
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).join(
             outdeg.select(F.col("node").alias("e_src"), "out_deg"), "e_src"
         )
-    )
+    ).localCheckpoint(eager=True)
     ranks = nodes.withColumn("rank_x1e12", F.lit(one // n_nodes).cast("bigint"))
     for it in range(iterations):
         # lineage hygiene (same cadence discipline as

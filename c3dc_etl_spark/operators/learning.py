@@ -45,8 +45,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.pinning import pin
-
 FP = 1_000_000  # fixed-point scale: weights in micro-units
 STUMP_SCALE = 1_000_000_000  # purity-score fixed-point (see stump_train)
 
@@ -85,12 +83,12 @@ def lsq_gd_train(
     weights)``: one history row per iteration (iter, w_<name>... in
     micro-units), and the final integer weight vector.
 
-    ONE aggregate per iteration; the feature projection is pinned so
+    ONE aggregate per iteration; the feature projection is checkpointed so
     iterations 2..T never re-read parquet or re-tokenize. Driver state
     is k integers.
     """
     k = len(feature_cols)
-    feats = pin(
+    feats = (
         df.select(
             F.col(target_col).cast("bigint").alias("__y"),
             *[
@@ -98,7 +96,7 @@ def lsq_gd_train(
                 for j, name in enumerate(feature_cols)
             ],
         )
-    )
+    ).localCheckpoint(eager=True)
     w = [0] * k
     history: list[tuple] = []
     for t in range(1, iterations + 1):
@@ -357,13 +355,13 @@ def logreg_gd_train(
         w_j       += trunc_div(grad_j, n * lr_den)      # exact int
 
     1/n makes the step mean-gradient-scaled (corpus-size stable, as in
-    lsq_gd_train). ONE aggregate per iteration over the pinned feature
+    lsq_gd_train). ONE aggregate per iteration over the checkpointed feature
     projection — the same agg also counts current-weight correct
     predictions (sigma_mu >= 5e5 vs y), so each history row carries
     (iter, updated weights..., n_correct BEFORE the update). Driver
     state is k integers per iteration."""
     k = len(feature_cols)
-    feats = pin(
+    feats = (
         df.select(
             F.col(label_col).cast("bigint").alias("__y"),
             *[
@@ -371,7 +369,7 @@ def logreg_gd_train(
                 for j, name in enumerate(feature_cols)
             ],
         )
-    )
+    ).localCheckpoint(eager=True)
     w = [0] * k
     history: list[tuple] = []
     for t in range(1, iterations + 1):

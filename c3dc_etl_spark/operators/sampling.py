@@ -165,7 +165,7 @@ def token_budget_subset(
     the two-phase scheme proven by the row-numbering operator: range-
     repartition on the hash key, per-partition running sums (distributed
     window), then add each partition's broadcast offset (one tiny
-    aggregate row per partition). The ranged frame is pinned so the
+    aggregate row per partition). The ranged frame is checkpointed so the
     running-sum and offset subtrees observe the SAME range boundaries
     (independent recomputation would re-sample them).
 
@@ -173,7 +173,6 @@ def token_budget_subset(
     """
     from c3dc_etl_spark.operators.dedup import spread
     from c3dc_etl_spark.operators.text import token_count
-    from c3dc_etl_spark.pinning import pin
 
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     rank_key = F.md5(
@@ -184,16 +183,15 @@ def token_budget_subset(
         rank_key.alias("__rk"),
         token_count(text_col).alias("n_tokens"),
     )
-    # releasable=False: the pin is the correctness device that keeps the
-    # running-sum and offset subtrees on the SAME sampled boundaries; a
-    # harness releasing pins between plan-build and collect must not
-    # drop it (see pinning.pin).
-    ranged = pin(
+    # the checkpoint is the correctness device that keeps the
+    # running-sum and offset subtrees on the SAME sampled boundaries: it
+    # stores one sampling of the range partitions, and the blocks live
+    # exactly as long as the frames built on it.
+    ranged = (
         keyed.repartitionByRange(n_parts, F.col("__rk")).withColumn(
             "__pid", F.spark_partition_id()
-        ),
-        releasable=False,
-    )
+        )
+    ).localCheckpoint(eager=True)
     w_in = Window.partitionBy("__pid").orderBy(F.col("__rk").asc())
     running = ranged.withColumn("__run", F.sum("n_tokens").over(w_in))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)

@@ -654,9 +654,7 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught by the value hash). Cost shape: the candidate pass is the
     audited LSH plan; the exact side is the inverted-index
     co-occurrence join (narrow integer rows only); both reuse one
-    pinned hashed-shingle projection."""
-    from c3dc_etl_spark.pinning import pin
-
+    checkpointed hashed-shingle projection."""
     docs = load(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_candidates(
         docs,
@@ -667,7 +665,7 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=BANDS,
         max_bucket_size=MAX_BUCKET,
     ).select("id_a", "id_b", "est_jaccard")
-    hashed = pin(
+    hashed = (
         D.spread(docs).select(
             F.col("doc_id").alias("doc"),
             F.array_distinct(
@@ -677,14 +675,14 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("dv"),
         )
-    )
+    ).localCheckpoint(eager=True)
     # Only ~10% of docs appear in ANY candidate pair (measured 0.096 at
     # sf0.1 and x5), so the exact co-occurrence self-join runs over
     # candidate docs only and its pair volume drops ~100x; results are
     # identical because co rows of non-candidate pairs are dropped by
-    # the final left join anyway. pin: pairs feeds the doc set and that
-    # left join.
-    pairs = pin(pairs)
+    # the final left join anyway. Checkpointed: pairs feeds the doc
+    # set and that left join.
+    pairs = pairs.localCheckpoint(eager=True)
     cand_docs = (
         pairs.select(F.col("id_a").alias("doc"))
         .unionAll(pairs.select(F.col("id_b").alias("doc")))

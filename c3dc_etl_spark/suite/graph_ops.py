@@ -133,14 +133,12 @@ def build_purchase_pagerank(
     (tests/plan_budget.json pins an all-zero row for the eager form),
     so the lazy build is the only place the real plan stays visible
     (ADVICE r10)."""
-    from c3dc_etl_spark.pinning import pin
-
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # reducers sized to the edge working set, not core count
     # (operators/iterscope.py: session-wide A/B at sf0.1, 32 -> 8
     # parts took this 6.0s -> 3.7s). The scope covers the WHOLE build
-    # — pin materialization, node count, and (via eager_final) the
+    # — checkpoint materialization, node count, and (via eager_final) the
     # fused power-iteration DAG — because the conf is read at action
     # time; the cheap lineitem count sizes it before any heavy work.
     # Scope sizing input: 2x the lineitem row count is an UPPER BOUND
@@ -153,16 +151,16 @@ def build_purchase_pagerank(
     # parquet-footer read, not a Spark job (ADVICE r10).
     n_edges = 2 * parquet_row_count(f"{sf_dir}/lineitem.parquet")
     with iteration_shuffle_scope(spark, n_edges):
-        # pin: the fact-table join + distinct feeds the edge mirror,
+        # checkpoint: the fact-table join + distinct feeds the edge mirror,
         # the node count, and (inside pagerank) the degree/edge
         # frames — one derivation instead of one per consumer.
         # Long-encoded node ids (module note above): the whole power
         # iteration joins/aggregates on 8-byte longs.
-        pairs = pin(
+        pairs = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(_enc_c("o_custkey").alias("c"), _enc_s("l_suppkey").alias("s"))
             .distinct()
-        )
+        ).localCheckpoint(eager=True)
         edges = pairs.select(
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionByName(
@@ -307,7 +305,6 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
         .distinct()
     )
     from c3dc_etl_spark.operators.dedup import drop_oversized_groups
-    from c3dc_etl_spark.pinning import pin
     from c3dc_etl_spark.sizing import (
         broadcast_budget_bytes,
         parquet_column_range,
@@ -315,7 +312,7 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
         sized_partitions,
     )
 
-    edges = pin(edges)
+    edges = edges.localCheckpoint(eager=True)
     adj = edges.select(F.col("u").alias("m"), F.col("v").alias("n")).unionAll(
         edges.select(F.col("v").alias("m"), F.col("u").alias("n"))
     )
@@ -345,11 +342,11 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
     if packable and li_rows * (6 + 3) * 8 <= broadcast_budget_bytes(spark):
         # the size filter is the same cap semantics as
         # drop_oversized_groups (count > cap dropped)
-        nbrs = pin(
+        nbrs = (
             adj.groupBy("m")
             .agg(F.array_sort(F.collect_list("n")).alias("ns"))
             .filter(F.size("ns") <= LP_HUB_CAP)
-        )
+        ).localCheckpoint(eager=True)
         # reducer count from the wedge-volume BOUND, never core count:
         # wedges = sum C(d_m, 2) <= (cap-1)/2 * adjacency entries
         # <= (cap-1)/2 * 6 * lineitem rows; ~48 MB of 16-byte wedge
@@ -384,9 +381,11 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
         # wedge self-join on the capped middle, a struct-keyed
         # aggregate, then the anti-join. Degree cap on the middle role
         # == group-size cap on m (map-side combined count + anti-join,
-        # never a partitionBy(m) window). pin: mid feeds BOTH sides of
-        # the wedge self-join.
-        mid = pin(drop_oversized_groups(adj, ["m"], LP_HUB_CAP))
+        # never a partitionBy(m) window). Checkpointed: mid feeds BOTH
+        # sides of the wedge self-join.
+        mid = drop_oversized_groups(adj, ["m"], LP_HUB_CAP).localCheckpoint(
+            eager=True
+        )
         wa = mid.select("m", F.col("n").alias("x"))
         wb = mid.select("m", F.col("n").alias("y"))
         wedges = (
@@ -453,15 +452,14 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-over-all-walks agree exactly, so the hash compare pins the
     iterative loop against ANSI recursion semantics."""
     from c3dc_etl_spark.operators.graph import bfs_hops
-    from c3dc_etl_spark.pinning import pin
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = pin(
+    pairs = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(_enc_c("o_custkey").alias("c"), _enc_s("l_suppkey").alias("s"))
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     edges = pairs.select(
         F.col("c").alias("src"), F.col("s").alias("dst")
     ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
@@ -515,11 +513,10 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance via a cheaper longer path, which a visited-set BFS would
     get wrong (operators/graph.py:sssp_bounded)."""
     from c3dc_etl_spark.operators.graph import sssp_bounded
-    from c3dc_etl_spark.pinning import pin
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = pin(
+    pairs = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey", "l_suppkey")
         .agg(F.countDistinct("o_orderkey").cast("bigint").alias("cnt"))
@@ -528,7 +525,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             _enc_s("l_suppkey").alias("s"),
             (F.lit(1) + (F.col("cnt") % 5)).cast("bigint").alias("w"),
         )
-    )
+    ).localCheckpoint(eager=True)
     edges = pairs.select(
         F.col("c").alias("src"), F.col("s").alias("dst"), "w"
     ).unionByName(
@@ -632,24 +629,23 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is constant in the round count
     (operators/graph.py:kcore_bounded)."""
     from c3dc_etl_spark.operators.graph import kcore_bounded
-    from c3dc_etl_spark.pinning import pin
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # reducers sized to the edge working set (iterscope: session-wide
     # A/B at sf0.1, 32 -> 8 parts took this 5.5s -> 3.2s); the scope
-    # covers the pin + the eagerly-checkpointed peel rounds — only the
+    # covers the edge checkpoint + the checkpointed peel rounds — only the
     # final degree agg runs under the session default
     # same upper-bound sizing input as pagerank: cached footer read,
     # 2x rows assumes few duplicate (cust, supp) pairs (see there)
     with iteration_shuffle_scope(
         spark, 2 * parquet_row_count(f"{sf_dir}/lineitem.parquet")
     ):
-        pairs = pin(
+        pairs = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(_enc_c("o_custkey").alias("c"), _enc_s("l_suppkey").alias("s"))
             .distinct()
-        )
+        ).localCheckpoint(eager=True)
         edges = pairs.select(
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionByName(
@@ -747,9 +743,8 @@ def temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day"),
     )
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    from c3dc_etl_spark.pinning import pin
 
-    e = pin(
+    e = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("c"),
@@ -757,7 +752,7 @@ def temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
         )
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     seeds = e.filter(F.col("c") % 100 == 0).select("c").distinct()
     hop1 = (
         e.join(seeds.withColumnRenamed("c", "__seed"), F.col("c") == F.col("__seed"))

@@ -160,7 +160,7 @@ FROM m
 @query("regressor_eval_r2", oracle=_GD_EVAL_ORACLE, tags=("learning",))
 def regressor_eval_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Evaluation pass for the trained regressor: re-run training (the
-    pinned feature frame makes iterations share one scan), then ONE
+    checkpointed feature frame makes iterations share one scan), then ONE
     aggregate computing R² from exact integer/decimal sums (SSE in
     squared micro-units; both engines derive the final double from the
     same exact integers). Converges to R² ~ 0.99 — asserted as a
@@ -420,7 +420,7 @@ def logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     separable label (price >= 150k) give a genuinely convergent ascent
     (accuracy climbs across the three steps); each history row carries
     the updated weights plus the pre-update correct-prediction count.
-    ONE aggregate per iteration over the pinned projection
+    ONE aggregate per iteration over the checkpointed projection
     (operators/learning.py:logreg_gd_train)."""
     from c3dc_etl_spark.operators.learning import logreg_gd_train
 

@@ -25,8 +25,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.pinning import release_pinned
-
 TABLES = (
     "region",
     "nation",
@@ -58,24 +56,15 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     pre-registered table views, or None for non-SQL-expressible ops
     (driver falls back to a rows-only check).
 
-    Each registered query releases the PREVIOUS query's pinned
-    intermediates on entry (pinning.release_pinned): a harness running
-    many queries sequentially (the driver's correctness gate, bench.py)
-    has materialized query N before building query N+1, so persisted
-    blocks never accumulate across a long-lived session. Releasing is
-    correctness-safe — pins are plain persists and recompute on demand.
+    Intermediates a query shares between consumers are eager local
+    checkpoints: their blocks live as long as the returned frame, so
+    nothing accumulates across a long-lived session and nothing needs
+    releasing between queries.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_pinned()
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        wrapped.__wrapped__ = fn
         REGISTRY[name] = QuerySpec(
-            name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__ or "", tags=tuple(tags)
+            name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "", tags=tuple(tags)
         )
         return fn
 

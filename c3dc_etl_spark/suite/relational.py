@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from c3dc_etl_spark.pinning import pin
 from c3dc_etl_spark.suite.registry import davg, dec, dsum, load, query
 
 
@@ -1007,13 +1006,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
-    from c3dc_etl_spark.pinning import pin
 
-    rev = pin(
+    rev = (
         li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
             F.sum(_disc_price()).cast("double").alias("total_revenue")
         )
-    )
+    ).localCheckpoint(eager=True)
     top = rev.agg(F.max("total_revenue").alias("m")).collect()[0]["m"]
     supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -1367,14 +1365,12 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped by EUROPE-region suppliers — the dataset's partsupp
     stand-in) exceeds a fixed fraction of the GLOBAL supply value: the
     group-HAVING-against-a-scalar-global-aggregate shape. The grouped
-    frame is computed ONCE (pinned) and serves both the per-part rows
+    frame is computed ONCE (checkpointed) and serves both the per-part rows
     and the global total — the total is a bounded 1-row collect folded
     back as a literal (Q15's discipline), so the plan re-aggregates
     |parts| rows, never rescans the fact table. Per-part values are
     decimal-exact; the 0.001 threshold multiplication is one IEEE
     double op identical in both engines."""
-    from c3dc_etl_spark.pinning import pin
-
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -1382,13 +1378,13 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     value = (
         dec("l_extendedprice").cast("decimal(18,2)") * dec("l_quantity")
     ).cast("decimal(18,4)")
-    vals = pin(
+    vals = (
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("l_partkey").alias("p_partkey"))
         .agg(F.sum(value).cast("double").alias("supply_value"))
-    )
+    ).localCheckpoint(eager=True)
     total = vals.agg(F.sum(dec("supply_value", 4)).cast("double").alias("t")).collect()[
         0
     ]["t"]
@@ -1569,26 +1565,24 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     each supplier singly delayed (distinct order-supplier pairs).
 
     Plan: the lineitem-orders lateness residual is computed ONCE and
-    pinned — l1 (nation+status restricted) and l3 (unrestricted) are
+    checkpointed — l1 (nation+status restricted) and l3 (unrestricted) are
     both derived from it. The EXISTS becomes a LEFT SEMI join (same
     orderkey, different supplier — equi on the key, inequality as
     residual) against the distinct order-supplier universe; the
     NOT EXISTS becomes a LEFT ANTI against the late set with the same
     key/residual split. Both shuffle on orderkey only; supplier, nation
     and region broadcast."""
-    from c3dc_etl_spark.pinning import pin
-
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderstatus"
     )
-    lo = pin(
+    lo = (
         li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
             F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
         )
-    )
+    ).localCheckpoint(eager=True)
     late = lo.select("l_orderkey", "l_suppkey").distinct()
     supp = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
@@ -1683,7 +1677,7 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
-    li = pin(li)
+    li = li.localCheckpoint(eager=True)
     n_orders = li.select("ok").distinct().count()  # bounded: one scalar
     item = li.groupBy(F.col("pk")).agg(F.count(F.lit(1)).alias("cnt"))
     a = li.select("ok", F.col("pk").alias("part_a"))
@@ -2132,9 +2126,8 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = rev.select(
         "cents", F.row_number().over(w).cast("bigint").alias("i")
     )
-    from c3dc_etl_spark.pinning import pin
 
-    ranked = pin(ranked)
+    ranked = ranked.localCheckpoint(eager=True)
     tot = ranked.groupBy().agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("total"),

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c3dc_etl_spark.operators import search as S
-from c3dc_etl_spark.pinning import pin
 from c3dc_etl_spark.suite.registry import load, query
 
 # DuckDB mirror of text.lower_tokens (the canonical tokenization).
@@ -218,7 +217,7 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine is exact over ALL shared tokens, and dot/norms are exact
     BIGINT fixed-point sums (operators/search.py:tfidf_cosine_pairs)."""
     docs = load(spark, sf_dir, "documents")
-    tf = pin(S.doc_term_freq(docs, "text", "doc_id"))
+    tf = S.doc_term_freq(docs, "text", "doc_id").localCheckpoint(eager=True)
     n_docs = tf.select("doc_id").distinct().count()
     return S.tfidf_cosine_pairs(tf, n_docs, df_cap_pct=TFIDF_DF_CAP_PCT)
 
@@ -285,10 +284,9 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two numbers); top-k plans TakeOrderedAndProject — per-partition
     heaps, never a global sort."""
     docs = load(spark, sf_dir, "documents")
-    # Pinned: the tf relation feeds the scalar pre-pass AND three
-    # subtrees of the scoring plan (candidates, df, dl). Released by the
-    # next registered query's entry (registry.query contract).
-    tf = pin(S.doc_term_freq(docs, "text", "doc_id"))
+    # Checkpointed: the tf relation feeds the scalar pre-pass AND three
+    # subtrees of the scoring plan (candidates, df, dl).
+    tf = S.doc_term_freq(docs, "text", "doc_id").localCheckpoint(eager=True)
     row = tf.agg(
         F.countDistinct("doc_id").alias("n"), F.sum("tf").alias("t")
     ).collect()[0]

@@ -472,19 +472,17 @@ def label_propagation_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-keyed self-join as the LSH candidate generation (work =
     collision mass, never n^2); votes aggregate map-side; the argmax is
     a per-test-node window over its <=n_labels vote rows."""
-    from c3dc_etl_spark.pinning import pin
-
     emb = load(spark, sf_dir, "embeddings")
     matrix = S.srp_planes(SRP_PLANES, EMB_DIM, "srp")
-    # pin: the SRP bucketing (8 planes x 64-dim folds per row) feeds the
+    # checkpoint: the SRP bucketing (8 planes x 64-dim folds per row) feeds the
     # labeled side, the test side, and the final join
-    b = pin(
+    b = (
         emb.select(
             F.col("vec_id").alias("id"),
             "label",
             S.srp_bucket(F.col("embedding"), matrix).alias("bucket"),
         )
-    )
+    ).localCheckpoint(eager=True)
     test = b.filter(F.col("id") % 2 == 1)
     labeled = b.filter(F.col("id") % 2 == 0).select(
         F.col("id").alias("lid"), F.col("label").alias("vote"), "bucket"
@@ -650,8 +648,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k greedy steps are O(kC) work per query — the driver holds only
     k one-row argmax picks (the BPE-merge pattern), never the
     embeddings."""
-    from c3dc_etl_spark.pinning import pin
-
     emb = load(spark, sf_dir, "embeddings")
     qv = S.quantize_int8(emb)
     qmin = emb.agg(F.min("vec_id")).first()[0]  # bounded scalar
@@ -665,14 +661,14 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qry = qv.filter(F.col("vec_id") == qmin).select(
         F.col("qvec").alias("qqv")
     )
-    cand = pin(
+    cand = (
         qv.filter(F.col("vec_id") != qmin)
         .select(F.col("vec_id").alias("id"), F.col("qvec").alias("qv"))
         .join(F.broadcast(qry))
         .select("id", "qv", idot.alias("simq"))
         .orderBy(F.col("simq").desc(), F.col("id").asc())
         .limit(MMR_CANDIDATES)
-    )
+    ).localCheckpoint(eager=True)
     a = cand.select(
         F.col("id").alias("id_a"), F.col("qv").alias("qa")
     )
@@ -684,11 +680,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    pairs = pin(
+    pairs = (
         a.join(b, F.col("id_a") != F.col("id_b")).select(
             "id_a", "id_b", pair_dot.alias("sim")
         )
-    )
+    ).localCheckpoint(eager=True)
     picks: list[tuple] = []
     first = cand.orderBy(F.col("simq").desc(), F.col("id").asc()).first()
     picks.append((1, first["id"], first["simq"], None))

@@ -270,7 +270,7 @@ def exact_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT global median (lower order statistic, k = ceil(n/2)) by
     distributed selection — iterated histogram refinement on the VALUE
     domain (operators/selection.py): each round one <=1024-group
-    partial-agg histogram over a pinned single-column frame narrows
+    partial-agg histogram over a checkpointed single-column frame narrows
     [lo, hi] by a factor of 1024 — never a global sort, never a single
     task holding the data, never materializing values on one node (the
     scale failure of sort-based exact quantiles; the oracle's ORDER
@@ -279,19 +279,17 @@ def exact_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic. Driver traffic: <=16 KB of bucket counts per round,
     ceil(log1024(range)) = 3 rounds at this domain width (the r1-r8
     bisection form was ~25 sequential count jobs)."""
-    from c3dc_etl_spark.pinning import pin
-
     li = load(spark, sf_dir, "lineitem")
     # NULLs are excluded on BOTH sides (a count-based search over a
     # population that includes rows its filters never see would
     # converge to the wrong order statistic)
-    cents = pin(
+    cents = (
         li.filter(F.col("l_extendedprice").isNotNull()).select(
             F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
             .cast("bigint")
             .alias("cents")
         )
-    )
+    ).localCheckpoint(eager=True)
     row = cents.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("cents").alias("lo"),
@@ -385,16 +383,14 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     {HLL_M} rows per group REGARDLESS of input — the canonical
     mergeable sketch (merge = elementwise register MAX); one exchange
     to (group, reg), partials map-side."""
-    from c3dc_etl_spark.pinning import pin
-
     ev = load(spark, sf_dir, "events")
-    # pin: the distinct (a full exchange of events) feeds both the
+    # checkpoint: the distinct (a full exchange of events) feeds both the
     # register chain and the exact-count aggregate
-    pairs = pin(
+    pairs = (
         ev.select(
             "event_type", hash32(F.col("user_id").cast("string")).alias("h")
         ).distinct()
-    )
+    ).localCheckpoint(eager=True)
     wmod = F.pmod(F.col("h"), F.lit(1 << HLL_WBITS))
     ranked = pairs.select(
         "event_type",
@@ -506,17 +502,16 @@ def sketch_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin(KMV_A, KMV_B)
     )
-    from c3dc_etl_spark.pinning import pin
 
-    pairs = pin(
+    pairs = (
         ev.select(
             "event_type", hash32(F.col("user_id").cast("string")).alias("h")
         ).distinct()
-    )
+    ).localCheckpoint(eager=True)
     # reducer-bounded k-minima (same salted two-phase as
     # sketch_kmv_distinct — a plain rank window would ship every
     # distinct member of a hot set to one task at scale)
-    sk = pin(
+    sk = (
         salted_topk(
             pairs,
             ["event_type"],
@@ -525,7 +520,7 @@ def sketch_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt=F.col("h"),
             n_salt=SALT_BUCKETS,
         ).select("event_type", "h")
-    )
+    ).localCheckpoint(eager=True)
     # the union sketch ranks <= 2k surviving minima — bounded window
     uw = Window.orderBy("h")
     uk = (
@@ -589,7 +584,7 @@ def sketch_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _select_kth(cents, k: int, lo: int, hi: int) -> int:
-    """k-th (1-indexed) order statistic of a pinned integer column by
+    """k-th (1-indexed) order statistic of a checkpointed integer column by
     iterated histogram refinement (operators/selection.py) — one
     <=1024-group partial-agg job per round, ceil(log1024(range))
     rounds, vs ~log2(range) count-below jobs for the old bisection."""
@@ -634,22 +629,20 @@ def feature_winsorize_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust feature scaling by winsorization: EXACT p05/p95 cut
     points via distributed selection (value-domain histogram
     refinement — one <=1024-group partial-agg job per round over the
-    pinned cents column, ~3 rounds per cut point, never a global
+    checkpointed cents column, ~3 rounds per cut point, never a global
     sort), then one aggregate proving the clip (outlier counts
     on both sides + the exact clipped integer sum). The oracle's
     ROW_NUMBER order statistics are precisely the sort-based shape the
     selection scheme replaces at 100 TB. All integer cents — no
     rounding discipline needed."""
-    from c3dc_etl_spark.pinning import pin
-
     li = load(spark, sf_dir, "lineitem")
-    cents = pin(
+    cents = (
         li.filter(F.col("l_extendedprice").isNotNull()).select(
             F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
             .cast("bigint")
             .alias("cents")
         )
-    )
+    ).localCheckpoint(eager=True)
     row = cents.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("cents").alias("lo"),
@@ -1348,16 +1341,15 @@ def rolling_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registers/estimator share sketch_hll_distinct's cross-engine-exact
     construction (portable md5 fold, scaled-integer harmonic sum, raw
     estimator only — ln()-corrected variants are libm-unstable)."""
-    from c3dc_etl_spark.pinning import pin
     from c3dc_etl_spark.suite.registry import day_bucket
 
     ev = load(spark, sf_dir, "events")
-    pairs = pin(
+    pairs = (
         ev.select(
             day_bucket("ts_us").alias("day"),
             hash32(F.col("user_id").cast("string")).alias("h"),
         ).distinct()
-    )
+    ).localCheckpoint(eager=True)
     wmod = F.pmod(F.col("h"), F.lit(1 << HLL_WBITS))
     ranked = pairs.select(
         "day",
@@ -1436,16 +1428,14 @@ def weighted_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value domain where each round's buckets accumulate WEIGHT SUMS
     instead of counts, converging to the smallest value whose
     cumulative weight reaches (W+1)/2. Same scale contract: no global
-    sort, one partial-agg histogram job per round over a pinned
+    sort, one partial-agg histogram job per round over a checkpointed
     two-column frame, ceil(log1024(range)) rounds. Weights are integral
     (rule-2 floor on the 2-dp quantity) so W and the stopping rule are
     exact; the oracle states the same order statistic via a cumulative
     window (fine at test scale, the sort it embodies being exactly
     what the selection loop avoids)."""
-    from c3dc_etl_spark.pinning import pin
-
     li = load(spark, sf_dir, "lineitem")
-    wf = pin(
+    wf = (
         li.filter(
             F.col("l_extendedprice").isNotNull()
             & F.col("l_quantity").isNotNull()
@@ -1457,7 +1447,7 @@ def weighted_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("wt"),
         )
-    )
+    ).localCheckpoint(eager=True)
     row = wf.agg(
         F.sum("wt").alias("tw"),
         F.min("cents").alias("lo"),

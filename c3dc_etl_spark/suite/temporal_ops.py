@@ -1477,9 +1477,8 @@ def rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         ev.select(day_bucket("ts_us").alias("day"), "user_id").distinct()
     )
-    from c3dc_etl_spark.pinning import pin
 
-    ud = pin(ud)
+    ud = ud.localCheckpoint(eager=True)
     days = ud.select("day").distinct()
     expanded = ud.select(
         "user_id",
@@ -1547,9 +1546,8 @@ def rolling_median_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(day_bucket("ts_us").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    from c3dc_etl_spark.pinning import pin
 
-    daily = pin(daily)
+    daily = daily.localCheckpoint(eager=True)
     days = daily.select("day")
     expanded = daily.select(
         F.explode(

@@ -757,9 +757,8 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda s: s["w2"].isNotNull(),
     )
     bg = docs.select(F.explode(pairs).alias("p")).select("p.w1", "p.w2")
-    from c3dc_etl_spark.pinning import pin
 
-    bg = pin(bg)
+    bg = bg.localCheckpoint(eager=True)
     n_total = bg.count()
     cxy = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_xy")

@@ -129,15 +129,13 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is STILL {CMS_DEPTH}*{CMS_WIDTH} cells — the single exchange
     aggregates to at most that many groups, map-side partials collapse
     the rest, and shard sketches merge by cell addition."""
-    from c3dc_etl_spark.pinning import pin
-
     docs = load(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    # pin: the tokenize/explode feeds the sketch, the exact top-k, and
-    # (via exact) the probe/estimate join — without the pin the corpus
+    # checkpoint: the tokenize/explode feeds the sketch, the exact
+    # top-k, and (via exact) the probe/estimate join — otherwise the corpus
     # scan + explode re-runs per consumer
-    toks = pin(
+    toks = (
         docs.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("token"))
-    )
+    ).localCheckpoint(eager=True)
     sketch = W.cms_sketch(toks, "token", depth=CMS_DEPTH, width=CMS_WIDTH)
     exact = (
         toks.groupBy("token")

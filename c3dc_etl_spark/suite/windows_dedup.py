@@ -129,24 +129,20 @@ def row_numbering_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries land, so the plan scales to any partition count while the
     result stays byte-identical to ROW_NUMBER() OVER (ORDER BY key).
 
-    The ranged frame is persisted: the numbering and offset subtrees
+    The ranged frame is checkpointed: the numbering and offset subtrees
     must observe the SAME range boundaries, and an independent
     recomputation re-samples them (different RDD id -> different
     sampling seed), which mis-aligns offsets with partition contents —
     observed as wrong numbering at sf0.1."""
-    from c3dc_etl_spark.pinning import pin
-
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    # releasable=False: this pin guarantees BOTH subtrees observe the
-    # same sampled range boundaries — an early release would recompute
-    # them differently (wrong numbering), so it must outlive any
-    # harness-driven release between plan-build and collect.
-    ranged = pin(
+    # the checkpoint guarantees BOTH subtrees observe the same sampled
+    # range boundaries; its blocks live as long as the returned frame,
+    # so no harness can drop them between plan-build and collect.
+    ranged = (
         cust.repartitionByRange(32, F.col("c_custkey")).withColumn(
             "__pid", F.spark_partition_id()
-        ),
-        releasable=False,
-    )
+        )
+    ).localCheckpoint(eager=True)
     w_in = Window.partitionBy("__pid").orderBy(F.col("c_custkey").asc())
     numbered = ranged.withColumn("__rn", F.row_number().over(w_in))
     # cumulative offset of earlier range partitions: num_partitions rows,

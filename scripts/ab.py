@@ -11,8 +11,9 @@ variant is A; every other one is compared against it.
 2. Timing: ``--pairs`` rounds, each running every variant once, the
    order rotating per round so no variant always goes first. A run is
    plan build plus a noop-sink write (every row computed, nothing
-   collected to the driver), then ``release_pinned()``. Its Spark jobs
-   are counted from a job group used for that run only.
+   collected to the driver); intermediates a variant checkpoints are
+   built inside the run and freed with its frame. Its Spark jobs are
+   counted from a job group used for that run only.
 
 Printed: each variant's walls, median and per-run job counts; for each
 challenger B, its wins over A, the median gap, A's IQR and whether the
@@ -58,8 +59,6 @@ def _iqr(xs: list[float]) -> float:
 
 
 def _timed_run(spark, fn, sf_dir: str, group: str) -> tuple[float, int]:
-    from c3dc_etl_spark.pinning import release_pinned
-
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -67,7 +66,6 @@ def _timed_run(spark, fn, sf_dir: str, group: str) -> tuple[float, int]:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
     finally:
-        release_pinned()
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return wall, len(sc.statusTracker().getJobIdsForGroup(group))
@@ -86,8 +84,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             sys.path.insert(0, p)
     fns = [_resolve(v) for v in args.variants]
 
-    from c3dc_etl_spark.pinning import release_pinned
-
     if spark is None:
         from c3dc_etl_spark.session import get_spark
 
@@ -95,11 +91,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
     base_df = fns[0](spark, args.sf)
     base_cols, base = base_df.columns, _sorted_rows(base_df)
-    release_pinned()
     for name, fn in zip(args.variants[1:], fns[1:]):
         df = fn(spark, args.sf)
         cols, rows = df.columns, _sorted_rows(df)
-        release_pinned()
         if cols != base_cols or rows != base:
             print(
                 f"MISMATCH {name}: {len(rows)} rows {cols} vs "

@@ -70,7 +70,6 @@ def main() -> int:
     import bench
     import __spark_entry__ as entrymod
 
-    from c3dc_etl_spark.pinning import release_pinned
     from c3dc_etl_spark.session import get_spark
 
     spark = get_spark("bench-sweep")
@@ -111,18 +110,14 @@ def main() -> int:
                     # this plan — a JIT-cold base inflates the denominator
                     # and understates linearity
                     fn(spark, sf_dir).toArrow()
-                    release_pinned()
                     t0 = time.perf_counter()
                     fn(spark, sf_dir).toArrow()
-                    release_pinned()
                     base = round(time.perf_counter() - t0, 3)
                     t0 = time.perf_counter()
                     fn(spark, scale_dir).toArrow()
-                    release_pinned()
                     scaled = round(time.perf_counter() - t0, 3)
                 except Exception as exc:  # report + continue; never a
                     # partial ledger row (test_registry pins row shape)
-                    release_pinned()
                     failed.append(name)
                     print(f"# scale FAILED {name}: {exc}", file=sys.stderr)
                     continue
@@ -175,10 +170,8 @@ def main() -> int:
         fn = qs[name]
         try:
             fn(spark, sf_dir).toArrow()  # untimed warm-up
-            release_pinned()
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
-            release_pinned()
             dt = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # record, keep sweeping
             ledger[name] = {"error": f"{type(exc).__name__}: {exc}"[:300],

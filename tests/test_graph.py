@@ -100,12 +100,10 @@ def test_pagerank_lazy_plan_shape_fence(spark):
     """eager_final collapses the registry query's visible plan to a
     checkpoint scan, which FORFEITS plan-lint coverage there — so fence
     the underlying lazy power-iteration plan here instead: no
-    cartesian products, no stray nested-loop joins, and the static
-    degree-annotated edge frame's derivation appears once per
-    iteration consumer, not re-derived from the fact tables (the pin
-    guarantees that at runtime)."""
+    cartesian products, no stray nested-loop joins; the static
+    degree-annotated edge frame is checkpointed once, so no iteration
+    consumer re-derives it from the fact tables."""
     from c3dc_etl_spark.operators.graph import pagerank
-    from c3dc_etl_spark.pinning import release_pinned
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 1) % 20}") for i in range(40)],
@@ -115,7 +113,6 @@ def test_pagerank_lazy_plan_shape_fence(spark):
     plan = ranks._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_pinned()
 
 
 def test_pagerank_registry_lazy_plan_shape_fence(spark):
@@ -126,9 +123,8 @@ def test_pagerank_registry_lazy_plan_shape_fence(spark):
     nested-loop joins, and the scan/exchange footprint of the full
     lazy 3-iteration DAG stays inside the measured round-11 envelope
     (107 "Scan " substrings / 99 "Exchange") with ~25% headroom — a
-    regression that re-derives the pinned edge frame per iteration
-    consumer would blow through it."""
-    from c3dc_etl_spark.pinning import release_pinned
+    regression that re-derives the checkpointed edge frame per
+    iteration consumer would blow through it."""
     from c3dc_etl_spark.suite.graph_ops import build_purchase_pagerank
 
     ranks = build_purchase_pagerank(
@@ -141,7 +137,6 @@ def test_pagerank_registry_lazy_plan_shape_fence(spark):
     exchanges = plan.count("Exchange")
     assert scans <= 135, f"lazy pagerank plan grew to {scans} scans"
     assert exchanges <= 125, f"lazy pagerank plan grew to {exchanges} exchanges"
-    release_pinned()
 
 
 def test_parquet_row_count_file_dir_and_cache(spark, tmp_path):
@@ -220,20 +215,17 @@ def test_link_prediction_fallback_without_footer_stats(spark, monkeypatch):
     from conftest import SF0001 as sf
 
     from c3dc_etl_spark import sizing
-    from c3dc_etl_spark.pinning import release_pinned
     from c3dc_etl_spark.suite.graph_ops import link_prediction_common_neighbors
 
     fast = link_prediction_common_neighbors(spark, sf)
     fast_plan = fast._jdf.queryExecution().executedPlan().toString()
     fast_rows = sorted(fast.collect())
-    release_pinned()
     assert "shiftleft" in fast_plan and "Generate" in fast_plan
 
     monkeypatch.setattr(sizing, "parquet_column_range", lambda path, col: None)
     slow = link_prediction_common_neighbors(spark, sf)
     slow_plan = slow._jdf.queryExecution().executedPlan().toString()
     slow_rows = sorted(slow.collect())
-    release_pinned()
     assert "shiftleft" not in slow_plan and "Generate" not in slow_plan
     assert len(fast_rows) > 0
     assert slow_rows == fast_rows

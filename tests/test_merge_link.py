@@ -150,7 +150,7 @@ def test_merge_consumers_read_the_materialized_merge(spark, tmp_path):
 def test_merge_blocks_live_as_long_as_the_frame(spark, tmp_path):
     """The materialized merge is stored while the frame is referenced
     and freed by Spark's ContextCleaner once it is dropped: nothing has
-    to call pinning.release_pinned."""
+    to release it."""
     import gc
     import time
 

@@ -76,14 +76,6 @@ def test_plan_shape_matches_committed_budget(spark, name):
             f"{name} has no committed plan budget; regenerate: "
             "python scripts/gen_plan_budget.py"
         )
-    # Derive the plan under a clean cache: an earlier test executing the
-    # same query leaves its session-lifetime correctness pin (pinning.pin
-    # releasable=False, e.g. the two-phase numbering intermediates)
-    # materialized, and CacheManager would then compile THIS plan against
-    # an InMemoryRelation subtree — fewer scans/exchanges than the
-    # committed cold-plan scorecard. Nothing is mid-collect during this
-    # test, so clearing is safe; queries re-pin on their next invocation.
-    spark.catalog.clearCache()
     plan = REGISTRY[name].fn(spark, SF)._jdf.queryExecution()
     got = plan_metrics(plan.executedPlan().toString())
     want = BUDGET[name]

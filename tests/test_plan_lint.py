@@ -105,17 +105,49 @@ _BNLJ_ALLOWED = {
 }
 
 
+def _sql_executions(spark):
+    """The SQL executions Spark retains, in ascending id order, once the
+    listener bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _last_execution_id(spark) -> int:
+    execs = _sql_executions(spark)
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _checkpoint_plans(spark, after_id: int) -> list[str]:
+    """Physical plans of the ``localCheckpoint`` executions whose id is
+    above ``after_id``: independent of how many executions are kept."""
+    execs = _sql_executions(spark)
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= after_id:
+            break
+        if (e.description() or "").startswith("localCheckpoint"):
+            plans.append(e.physicalPlanDescription())
+    return plans
+
+
 @pytest.mark.parametrize(
     "name", [n for n in sorted(REGISTRY) if n not in _DRIVER_SIDE]
 )
 def test_no_cartesian_or_stray_bnlj(spark, name):
+    """Lints the query's plan and the plan of every local checkpoint its
+    build ran: a checkpointed subplan executes inside the call and shows
+    up in the returned plan only as a scan of the stored blocks."""
+    before = _last_execution_id(spark)
     df = REGISTRY[name].fn(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-    if name not in _BNLJ_ALLOWED:
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{name}: unexpected BroadcastNestedLoopJoin"
-        )
+    plans = [df._jdf.queryExecution().executedPlan().toString()]
+    plans += _checkpoint_plans(spark, before)
+    for plan in plans:
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
+        if name not in _BNLJ_ALLOWED:
+            assert "BroadcastNestedLoopJoin" not in plan, (
+                f"{name}: unexpected BroadcastNestedLoopJoin"
+            )
 
 
 def test_bucketed_join_is_exchange_free(spark):

@@ -2159,14 +2159,17 @@ def test_cdf_since_beyond_head_is_empty(spark, tmp_path):
 
 def test_dv_ops_do_not_leak_global_pins(spark, tmp_path):
     """Round-12 review: the DV write paths persist their match set
-    LOCALLY and release it before returning — a library caller with no
-    release_pinned() hook must not accumulate registered pins."""
-    from c3dc_etl_spark import pinning
+    LOCALLY and unpersist it before returning — a library caller must
+    not accumulate persisted blocks."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
 
     log, orders = _dv_table(spark, tmp_path)
-    before = len(pinning._PINNED)
+    before = persisted()
     log.delete_where_dv(spark, "o_orderkey % 7 = 0")
     log.update_where_dv(
         spark, "o_orderkey % 13 = 0", {"o_totalprice": "o_totalprice + 1.0"}
     )
-    assert len(pinning._PINNED) == before
+    assert not persisted() - before

@@ -56,6 +56,22 @@ def test_inconsistent_alive_after_dead_drops_participant(spark):
         ],
     )
     assert got == {"p2": "s3"}
+    # a null status is neither Dead nor non-Dead for the check, and a
+    # null age sorts below every age: neither makes a participant
+    # inconsistent, while an Alive age above the Dead age still does
+    got = _pick(
+        spark,
+        [
+            ("p1", "s1", "Dead", 200, 1),
+            ("p1", "s2", None, 300, 2),
+            ("p2", "s3", "Dead", 200, 1),
+            ("p2", "s4", "Alive", None, 2),
+            ("p3", "s5", "Dead", 200, 1),
+            ("p3", "s6", None, 300, 2),
+            ("p3", "s7", "Alive", 250, 3),
+        ],
+    )
+    assert got == {"p1": "s1", "p2": "s3"}
 
 
 def test_inconsistent_kept_when_flag_off(spark):
