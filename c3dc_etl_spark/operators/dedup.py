@@ -980,7 +980,7 @@ def exact_substring_spans(
          scan already reads).
        Either way the confirm set (``gram_c``, the candidate-subset
        gram — renamed from the scan's ``gram`` so provenance is
-       visible in the plan) is pinned once and CONFIRMED exactly:
+       visible in the plan) is checkpointed once and CONFIRMED exactly:
        hash collisions die here, so the output is exact, not
        probabilistic — a gram is kept iff its TOTAL count >= 2 (all
        copies of a gram share its hash, so the subset count equals

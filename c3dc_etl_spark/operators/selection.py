@@ -5,7 +5,7 @@ The r1-r8 selection queries (exact median, weighted median, winsorize
 cut points) used value-domain BISECTION: one count-below aggregate per
 round, ~log2(range) ≈ 25-35 sequential Spark jobs. Each job is cheap,
 but job-launch latency dominates: at sf0.1 the winsorize pair of
-searches cost ~50 jobs ≈ 5-6 s of round trips over a pinned 600k-row
+searches cost ~50 jobs ≈ 5-6 s of round trips over a cached 600k-row
 column.
 
 Histogram refinement keeps the same exactness and scale contract —
@@ -18,7 +18,7 @@ rounds total — 3 jobs for a 10^7-wide integer domain at bins=1024
 instead of ~25.
 
 At 100 TB the shape is unchanged: each round is one map-side-combined
-aggregate over the pinned column (shuffle = n_partitions x bins
+aggregate over the checkpointed column (shuffle = n_partitions x bins
 partial rows), and rounds are O(log range) regardless of row count.
 
 Reference parity note: the reference engine exposes exact quantiles via
@@ -55,7 +55,7 @@ def select_kth(
     a phantom bucket. The standard order-statistic contract the
     bisection form had.
 
-    ``df`` should be pinned by the caller: every round scans it once.
+    ``df`` should be checkpointed by the caller: every round scans it once.
     """
     if k < 1:
         raise ValueError(f"rank k must be >= 1, got {k}")

@@ -1742,8 +1742,7 @@ class TableLog:
         # per consumer (and a non-deterministic predicate cannot mark
         # one position set while recording another). Every consumer
         # materializes inside this method, so the cache is released
-        # before returning — never registered in the global pin list a
-        # library caller has no way to drain.
+        # before returning — a library caller never inherits the blocks.
         matches = tagged.filter(F.expr(predicate_sql)).select(
             F.col("__file").alias("file"), F.col("__pos").alias("pos")
         ).persist()
